@@ -21,10 +21,34 @@ import os
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qsl, urlparse
 
 from pyspark.sql import SparkSession
 
 from pathwaydataframework_spark.internals.table import Table
+
+
+def read_json_object(handler) -> dict:
+    """The JSON object POSTed to a ``BaseHTTPRequestHandler``.  Raises
+    ``ValueError`` — the client's error, answered 400 — for a bad
+    Content-Length, a body that is not JSON, or JSON that is not an object."""
+    length = int(handler.headers.get("Content-Length", 0))
+    if length < 0:
+        raise ValueError(f"negative Content-Length: {length}")
+    payload = json.loads(handler.rfile.read(length) or b"{}")
+    if not isinstance(payload, dict):
+        raise ValueError("request body must be a JSON object")
+    return payload
+
+
+def send_reply(
+    handler, status: int, body: bytes = b"", content_type: str = "application/json"
+) -> None:
+    handler.send_response(status)
+    handler.send_header("Content-Type", content_type)
+    handler.send_header("Content-Length", str(len(body)))
+    handler.end_headers()
+    handler.wfile.write(body)
 
 
 class HttpIngressServer:
@@ -55,14 +79,13 @@ class HttpIngressServer:
 
         class Handler(BaseHTTPRequestHandler):
             def do_POST(self) -> None:  # noqa: N802 — stdlib API name
-                length = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(length)
                 try:
+                    body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
                     # validate: each non-empty line must be a JSON object
                     lines = [ln for ln in body.decode("utf-8").splitlines() if ln.strip()]
                     for ln in lines:
                         json.loads(ln)
-                except (UnicodeDecodeError, json.JSONDecodeError):
+                except ValueError:  # bad Content-Length, utf-8 or JSON
                     self.send_response(400)
                     self.end_headers()
                     return
@@ -106,8 +129,12 @@ class RestIngressServer:
     driver), and the HTTP response BLOCKS until the response writer
     delivers a row with that ``query_id`` (or the timeout passes).  The
     response path intentionally runs driver-side: responses leave through
-    this very HTTP server, so they are the server's working set, not a
-    data-plane funnel.
+    the webserver, so they are the server's working set, not a data-plane
+    funnel.
+
+    Requests always arrive through a :class:`PathwayWebserver`, as in the
+    reference: the shared ``webserver`` when one is given, else a private
+    one on ``host``/``port`` that :meth:`stop` shuts down.
     """
 
     def __init__(
@@ -135,68 +162,19 @@ class RestIngressServer:
         self._pending: dict[str, threading.Event] = {}
         self._results: dict[str, object] = {}
         self._lock = threading.Lock()
-        self._server = None
-        self._thread = None
-        self._webserver = webserver
-        if webserver is not None:
-            # shared PathwayWebserver: it owns the socket and dispatches to
-            # this route's _handle_request
-            webserver.register(route, self)
-            return
-        outer = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def do_POST(self) -> None:  # noqa: N802 — stdlib API name
-                outer._handle_request(self, "POST")
-
-            def do_GET(self) -> None:  # noqa: N802
-                outer._handle_request(self, "GET")
-
-            def log_message(self, *args) -> None:
-                pass
-
-        self._server = ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
-
-    def _handle_request(self, handler, method: str) -> None:
-        """Shared request path for the standalone server and the
-        PathwayWebserver dispatcher."""
-        from urllib.parse import parse_qsl, urlparse
-
-        if method not in self._allowed:
-            handler.send_response(405)
-            handler.end_headers()
-            return
-        if self._webserver is None and self._route != "/" and (
-            urlparse(handler.path).path != self._route
-        ):
-            handler.send_response(404)
-            handler.end_headers()
-            return
-        if method == "POST":
-            length = int(handler.headers.get("Content-Length", 0))
-            body = handler.rfile.read(length)
-            try:
-                payload = json.loads(body.decode("utf-8") or "{}")
-            except (UnicodeDecodeError, json.JSONDecodeError):
-                handler.send_response(400)
-                handler.end_headers()
-                return
-        else:
-            payload = dict(parse_qsl(urlparse(handler.path).query))
-        self._process(handler, payload)
+        self._own_webserver = webserver is None
+        self._webserver = webserver or PathwayWebserver(host, port)
+        self._webserver.register(route, self)
 
     def _process(self, handler, payload: dict) -> None:
+        """Answer one request the webserver dispatched to this route."""
         if self._validator is not None:
             try:
                 verdict = self._validator(payload)
             except Exception as exc:  # noqa: BLE001 — validator contract
                 verdict = str(exc)
             if verdict is not None:
-                handler.send_response(400)
-                handler.end_headers()
-                handler.wfile.write(str(verdict).encode("utf-8"))
+                send_reply(handler, 400, str(verdict).encode("utf-8"), "text/plain")
                 return
         qid = uuid.uuid4().hex
         ev = threading.Event()
@@ -213,10 +191,7 @@ class RestIngressServer:
             with self._lock:
                 result = self._results.pop(qid, None)
                 self._pending.pop(qid, None)
-            handler.send_response(200)
-            handler.send_header("Content-Type", "application/json")
-            handler.end_headers()
-            handler.wfile.write(json.dumps(result).encode("utf-8"))
+            send_reply(handler, 200, json.dumps(result).encode("utf-8"))
         else:
             with self._lock:
                 # deliver() may race the timeout: it can store the result
@@ -224,15 +199,11 @@ class RestIngressServer:
                 # maps so an abandoned result can't accumulate forever.
                 self._pending.pop(qid, None)
                 self._results.pop(qid, None)
-            handler.send_response(504)
-            handler.end_headers()
+            send_reply(handler, 504)
 
     @property
     def url(self) -> str:
-        if self._server is None and self._webserver is not None:
-            return self._webserver.url + self._route
-        host, port = self._server.server_address[:2]
-        return f"http://{host}:{port}{self._route}"
+        return self._webserver.url + self._route
 
     def table(self) -> Table:
         schema = self._schema
@@ -278,10 +249,8 @@ class RestIngressServer:
         q = getattr(self, "_response_query", None)
         if q is not None:
             q.stop()
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._thread.join(timeout=5)
+        if self._own_webserver:
+            self._webserver.stop()
 
 
 def rest_connector(
@@ -336,8 +305,10 @@ class PathwayWebserver:
     """Reference io/http/_server.py:329 — shared host/port configuration
     for ``rest_connector``: several connectors can register distinct
     routes on ONE webserver instance.  Each registered route keeps its own
-    spool directory and pending-request map; the dispatcher routes by
-    ``self.path``."""
+    spool directory and pending-request map.  The dispatcher is the one
+    request core of ``rest_connector``: it routes by path (404 when no
+    route matches), checks the route's methods (405), decodes the payload
+    (400 for a malformed request) and hands it to the route."""
 
     def __init__(self, host: str, port: int, *, with_schema_endpoint: bool = True,
                  with_cors: bool = False):
@@ -356,26 +327,23 @@ class PathwayWebserver:
 
         class Dispatcher(BaseHTTPRequestHandler):
             def _dispatch(self, method: str) -> None:
-                from urllib.parse import urlparse
-
-                path = urlparse(self.path).path
-                if outer.with_schema_endpoint and path == "/_schema":
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.end_headers()
-                    self.wfile.write(
-                        json.dumps(
-                            {r: str(s._schema) for r, s in outer._routes.items()}
-                        ).encode()
-                    )
-                    return
-                srv = outer._routes.get(path)
+                url = urlparse(self.path)
+                if outer.with_schema_endpoint and url.path == "/_schema":
+                    schemas = {r: str(s._schema) for r, s in outer._routes.items()}
+                    return send_reply(self, 200, json.dumps(schemas).encode())
+                srv = outer._routes.get(url.path)
                 if srv is None:
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                # delegate to the route's own handler logic
-                srv._handle_request(self, method)
+                    return send_reply(self, 404)
+                if method not in srv._allowed:
+                    return send_reply(self, 405)
+                try:
+                    if method == "POST":
+                        payload = read_json_object(self)
+                    else:
+                        payload = dict(parse_qsl(url.query))
+                except ValueError as exc:
+                    return send_reply(self, 400, json.dumps({"error": str(exc)}).encode())
+                srv._process(self, payload)
 
             def do_POST(self) -> None:  # noqa: N802
                 self._dispatch("POST")

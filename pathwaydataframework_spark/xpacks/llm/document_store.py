@@ -35,6 +35,7 @@ broadcast-probe plan, so the corpus is never shuffled per query.
 from __future__ import annotations
 
 import re
+from functools import reduce
 from typing import Callable, Iterable, Sequence
 
 import pyspark.sql.functions as F
@@ -464,16 +465,26 @@ class DocumentStore:
 
     # -- retrieval ----------------------------------------------------------
 
+    def _retriever(self, corpus: DataFrame):
+        """(retriever, indexed frame) over ``corpus``'s chunks: BM25 over
+        the chunk text, or the factory's KNN index over the embedder's
+        chunk vectors."""
+        slim = corpus.select("chunk_id", "text", "metadata")
+        factory = self.retriever_factory
+        if isinstance(factory, TantivyBM25Factory):
+            return BM25Index(slim, id_col="chunk_id", text_col="text"), slim
+        embedded = slim.withColumn("embedding", self.embedder(F.col("text")))
+        kwargs = dict(factory.kwargs, id_col="chunk_id", vec_col="embedding")
+        return KNNIndex(embedded, **kwargs), embedded
+
     def _retrieve_group(
         self, qgrp: DataFrame, corpus: DataFrame, k_max: int, query_id_col: str
     ) -> DataFrame:
         """Top-k_max hits for one filter group: (query_id, score, rank,
         text, metadata).  BM25 probes text directly; vector retrievers
         embed the query text with the store's embedder first."""
-        slim = corpus.select("chunk_id", "text", "metadata")
-        factory = self.retriever_factory
-        if isinstance(factory, TantivyBM25Factory):
-            inner = BM25Index(slim, id_col="chunk_id", text_col="text")
+        inner, indexed = self._retriever(corpus)
+        if isinstance(inner, BM25Index):
             hits = inner.query(
                 qgrp.select(query_id_col, "query"),
                 k=k_max,
@@ -481,10 +492,6 @@ class DocumentStore:
                 query_text_col="query",
             ).withColumnRenamed("doc_id", "__hit_id")
         else:
-            embedded = slim.withColumn("embedding", self.embedder(F.col("text")))
-            kwargs = dict(factory.kwargs)
-            kwargs.update(id_col="chunk_id", vec_col="embedding")
-            inner = KNNIndex(embedded, **kwargs)
             probes = qgrp.select(
                 query_id_col, self.embedder(F.col("query")).alias("embedding")
             )
@@ -496,7 +503,8 @@ class DocumentStore:
                 hits = hits.withColumnRenamed("query_id", query_id_col)
             hits = hits.withColumnRenamed("neighbor_id", "__hit_id")
         return hits.join(
-            slim.withColumnRenamed("chunk_id", "__hit_id"), on="__hit_id"
+            indexed.select(F.col("chunk_id").alias("__hit_id"), "text", "metadata"),
+            on="__hit_id",
         ).select(query_id_col, "score", "rank", "text", "metadata")
 
     # -- query endpoints ----------------------------------------------------
@@ -539,19 +547,36 @@ class DocumentStore:
         )
         return sorted((r["f"], r["k_max"]) for r in rows)
 
-    def _group_frames(self, queries: DataFrame):
-        """Yield (filtered queries, filtered chunk corpus, filtered parsed
-        docs, max k) per distinct merged filter."""
+    def _per_group(
+        self, queries: DataFrame, answer: Callable[..., DataFrame | None]
+    ) -> DataFrame | None:
+        """The per-filter-group loop of every query endpoint: the union of
+        ``answer(group queries, filtered chunks, filtered parsed docs, max
+        k)`` over the distinct merged filters.  Groups answering None are
+        left out; None when none answers.  Zero queries form one unfiltered
+        empty group, so the answer keeps its schema."""
         merged_col = self._merged_filter_col(queries)
-        for merged, k_max in self._filter_groups(queries):
-            qgrp = queries.filter(merged_col == F.lit(merged))
-            corpus = self.chunked_docs
-            docs = self.parsed_docs
+        outs = []
+        for merged, k_max in self._filter_groups(queries) or [("", None)]:
+            corpus, docs = self.chunked_docs, self.parsed_docs
             if merged:
                 pred = translate_metadata_filter(merged, F.col("metadata"))
-                corpus = corpus.filter(pred)
-                docs = docs.filter(pred)
-            yield qgrp, corpus, docs, k_max
+                corpus, docs = corpus.filter(pred), docs.filter(pred)
+            out = answer(queries.filter(merged_col == F.lit(merged)), corpus, docs, k_max)
+            if out is not None:
+                outs.append(out)
+        return reduce(DataFrame.unionByName, outs) if outs else None
+
+    def _metadata_query(self, queries: DataFrame | Table, meta: Column) -> DataFrame:
+        """Per query: the sorted ``meta`` of its filter's parsed documents."""
+
+        def answer(qgrp, _corpus, docs, _k):
+            metas = docs.select(meta.alias("m")).agg(
+                F.sort_array(F.collect_list("m")).alias("result")
+            )
+            return qgrp.crossJoin(F.broadcast(metas))
+
+        return self._per_group(_df(queries), answer)
 
     def retrieve_query(
         self, retrieval_queries: DataFrame | Table, *, query_id_col: str = "query_id"
@@ -564,32 +589,27 @@ class DocumentStore:
         queries = _df(retrieval_queries)
         if "k" not in queries.columns:
             queries = queries.withColumn("k", F.lit(3))
-        outs = []
-        for qgrp, corpus, _docs, k_max in self._group_frames(queries):
+
+        def answer(qgrp, corpus, _docs, k_max):
             if k_max is None:
-                continue
+                return None
             hits = self._retrieve_group(qgrp, corpus, int(k_max), query_id_col)
             hits = hits.join(
                 F.broadcast(qgrp.select(query_id_col, "k")), on=query_id_col
             ).filter(F.col("rank") <= F.col("k"))
-            outs.append(
-                hits.select(
-                    query_id_col,
-                    F.struct(
-                        (-F.col("score")).alias("dist"),
-                        F.col("text"),
-                        F.col("metadata"),
-                    ).alias("__hit"),
-                )
+            return hits.select(
+                query_id_col,
+                F.struct(
+                    (-F.col("score")).alias("dist"), F.col("text"), F.col("metadata")
+                ).alias("__hit"),
             )
+
+        hits = self._per_group(queries, answer)
         base = queries.select(query_id_col)
-        if not outs:
+        if hits is None:
             return base.select(
                 query_id_col, F.array().cast(self._EMPTY_RESULT).alias("result")
             )
-        hits = outs[0]
-        for o in outs[1:]:
-            hits = hits.unionByName(o)
         collected = hits.groupBy(query_id_col).agg(
             F.sort_array(F.collect_list("__hit")).alias("result")
         )
@@ -611,15 +631,7 @@ class DocumentStore:
     def inputs_query(self, input_queries: DataFrame | Table) -> DataFrame:
         """Per query: the metadata list of matching input documents
         (reference inputs_query, document_store.py:385)."""
-        queries = _df(input_queries)
-        outs = []
-        for qgrp, _corpus, docs, _k in self._group_frames(queries):
-            metas = docs.agg(F.sort_array(F.collect_list("metadata")).alias("result"))
-            outs.append(qgrp.crossJoin(F.broadcast(metas)))
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
+        return self._metadata_query(input_queries, F.col("metadata"))
 
     @property
     def index(self):
@@ -627,17 +639,8 @@ class DocumentStore:
         reference ``DocumentStore.index`` (document_store.py:466)."""
         from pathwaydataframework_spark.operators.ml_index import DataIndex
 
-        slim = self.chunked_docs.select("chunk_id", "text", "metadata")
-        factory = self.retriever_factory
-        if isinstance(factory, TantivyBM25Factory):
-            inner = BM25Index(slim, id_col="chunk_id", text_col="text")
-        else:
-            embedded = slim.withColumn("embedding", self.embedder(F.col("text")))
-            kwargs = dict(factory.kwargs)
-            kwargs.update(id_col="chunk_id", vec_col="embedding")
-            inner = KNNIndex(embedded, **kwargs)
-            slim = embedded
-        return DataIndex(slim, inner, id_col="chunk_id")
+        inner, indexed = self._retriever(self.chunked_docs)
+        return DataIndex(indexed, inner, id_col="chunk_id")
 
 
 class SlidesDocumentStore(DocumentStore):
@@ -649,23 +652,14 @@ class SlidesDocumentStore(DocumentStore):
     def parsed_documents_query(
         self, parse_docs_queries: DataFrame | Table
     ) -> DataFrame:
-        queries = _df(parse_docs_queries)
-        outs = []
-        for qgrp, _corpus, docs, _k in self._group_frames(queries):
-            meta = F.col("metadata")
-            def _drop(key):  # bind key without adding a lambda parameter
-                return lambda k, _v: k != F.lit(key)
+        meta = F.col("metadata")
 
-            for key in self.excluded_response_metadata:
-                # strip excluded keys JVM-side via a map round-trip
-                meta = F.to_json(
-                    F.map_filter(F.from_json(meta, "map<string,string>"), _drop(key))
-                )
-            metas = docs.select(meta.alias("m")).agg(
-                F.sort_array(F.collect_list("m")).alias("result")
+        def _drop(key):  # bind key without adding a lambda parameter
+            return lambda k, _v: k != F.lit(key)
+
+        for key in self.excluded_response_metadata:
+            # strip excluded keys JVM-side via a map round-trip
+            meta = F.to_json(
+                F.map_filter(F.from_json(meta, "map<string,string>"), _drop(key))
             )
-            outs.append(qgrp.crossJoin(F.broadcast(metas)))
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
+        return self._metadata_query(parse_docs_queries, meta)

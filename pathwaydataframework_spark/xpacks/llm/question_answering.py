@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pathwaydataframework_spark.internals.table import Table
 from pathwaydataframework_spark.xpacks.llm import llms, prompts
 from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
+from pathwaydataframework_spark.xpacks.llm.vector_store import VectorStoreClient
 
 __all__ = [
     "answer_with_geometric_rag_strategy",
@@ -297,40 +298,27 @@ class SummaryQuestionAnswerer(BaseQuestionAnswerer):
 
 
 class RAGClient:
-    """Reference :816 — HTTP client for the four REST endpoints a served
-    question answerer exposes (servers.py).  Uses only the stdlib HTTP
-    client; endpoints follow the reference routes."""
+    """Reference :816 — HTTP client for a served question answerer
+    (:class:`~servers.QARestServer`), on the routes the reference client
+    uses: /v2/answer and /v2/list_documents, plus /v1/retrieve and
+    /v1/statistics through a :class:`VectorStoreClient`, as the reference
+    does with its ``index_client``."""
 
     def __init__(self, host: str, port: int, *, timeout: float = 30.0):
-        self.base = f"http://{host}:{port}"
-        self.timeout = timeout
-
-    def _post(self, route: str, payload: dict):
-        import json as _json
-        import urllib.request
-
-        req = urllib.request.Request(
-            self.base + route,
-            data=_json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return _json.loads(resp.read())
+        self.index_client = VectorStoreClient(host=host, port=port, timeout=timeout)
+        self.base = self.index_client.url
 
     def answer(self, prompt: str, filters: str | None = None, response_type: str = "short"):
         payload = {"prompt": prompt, "response_type": response_type}
         if filters:
             payload["filters"] = filters
-        return self._post("/v2/answer", payload)
+        return self.index_client._post("/v2/answer", payload)
 
     def retrieve(self, query: str, k: int = 6, metadata_filter: str | None = None):
-        payload = {"query": query, "k": k}
-        if metadata_filter:
-            payload["metadata_filter"] = metadata_filter
-        return self._post("/v2/retrieve", payload)
+        return self.index_client.query(query, k=k, metadata_filter=metadata_filter)
 
     def statistics(self):
-        return self._post("/v2/statistics", {})
+        return self.index_client.get_vectorstore_statistics()
 
     def list_documents(self):
-        return self._post("/v2/list_documents", {})
+        return self.index_client._post("/v2/list_documents", {})

@@ -4,10 +4,16 @@ Reference: ``BaseRestServer`` (:16, route registry over the engine's HTTP
 connector), ``DocumentStoreServer`` (:92), ``QARestServer`` (:140),
 ``QASummaryRestServer`` (:193), plus ``serve_callable`` (:227).
 
-Same stance as vector_store.py: the REST facade is stdlib
-``ThreadingHTTPServer`` turning each request into a 1-row batch query
-against the distributed plan — an interactive/parity surface, not the
-scale path (batch DataFrame endpoints answer many queries in one job).
+:class:`BaseRestServer` is the one JSON-over-POST request core of
+``xpacks.llm``: every server here, ``VectorStoreServer`` included (it is a
+:class:`DocumentStoreServer`), answers through its handler on a stdlib
+``ThreadingHTTPServer``.  An unknown route answers 404, a malformed
+request 400 (bad Content-Length, a body that is not a JSON object, a
+metadata filter the DSL rejects), and any other handler exception 500,
+each with a JSON ``{"error": ...}`` body.  A route turns its request into
+a 1-row batch query against the distributed plan — an interactive/parity
+surface, not the scale path (batch DataFrame endpoints answer many
+queries in one job).
 """
 
 from __future__ import annotations
@@ -15,14 +21,17 @@ from __future__ import annotations
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Callable
+from typing import TYPE_CHECKING, Callable
 
 import pyspark.sql.functions as F
 
+from pathwaydataframework_spark.sources.http_ingress import read_json_object, send_reply
 from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
-from pathwaydataframework_spark.xpacks.llm.question_answering import (
-    BaseRAGQuestionAnswerer,
-)
+
+if TYPE_CHECKING:  # question_answering imports this module via vector_store
+    from pathwaydataframework_spark.xpacks.llm.question_answering import (
+        BaseRAGQuestionAnswerer,
+    )
 
 __all__ = [
     "BaseRestServer",
@@ -64,27 +73,23 @@ class BaseRestServer:
         return register
 
     def run(self, *, threaded: bool = True, **kwargs):
-        outer = self
+        routes = self._routes
 
         class Handler(BaseHTTPRequestHandler):
             def do_POST(self):  # noqa: N802 — http.server API
-                length = int(self.headers.get("Content-Length", 0))
                 try:
-                    payload = json.loads(self.rfile.read(length) or b"{}")
-                    fn = outer._routes.get(self.path)
+                    payload = read_json_object(self)
+                    fn = routes.get(self.path)
                     if fn is None:
-                        body, status = b'{"error": "unknown route"}', 404
+                        status, body = 404, {"error": "unknown route"}
                     else:
-                        body = json.dumps(fn(payload)).encode()
-                        status = 200
+                        status, body = 200, fn(payload)
+                    data = json.dumps(body).encode()
                 except Exception as exc:
-                    body = json.dumps({"error": str(exc)}).encode()
-                    status = 500
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                    # ValueError is the client's: a malformed request or filter
+                    status = 400 if isinstance(exc, ValueError) else 500
+                    data = json.dumps({"error": str(exc)}).encode()
+                send_reply(self, status, data)
 
             def log_message(self, *args):
                 pass
@@ -165,7 +170,9 @@ class DocumentStoreServer(BaseRestServer):
 
 class QARestServer(DocumentStoreServer):
     """Reference QARestServer (:140) — adds /v1/pw_list_documents and
-    /v1/pw_ai_answer over a :class:`BaseRAGQuestionAnswerer`."""
+    /v1/pw_ai_answer over a :class:`BaseRAGQuestionAnswerer`, and the same
+    handlers at the reference's /v2/list_documents and /v2/answer (the
+    routes ``RAGClient`` posts to)."""
 
     def __init__(
         self, host: str = "127.0.0.1", port: int = 0,
@@ -177,8 +184,10 @@ class QARestServer(DocumentStoreServer):
         super().__init__(
             host, port, document_store=rag_question_answerer.indexer, **kwargs
         )
-        self.serve("/v1/pw_list_documents", self._inputs)
-        self.serve("/v1/pw_ai_answer", self._answer)
+        for route in ("/v1/pw_list_documents", "/v2/list_documents"):
+            self.serve(route, self._inputs)
+        for route in ("/v1/pw_ai_answer", "/v2/answer"):
+            self.serve(route, self._answer)
 
     def _answer(self, payload: dict):
         q = self._spark.createDataFrame(

@@ -6,8 +6,9 @@ split → embed → index pipeline and serves ``/v1/retrieve``,
 ``VectorStoreClient`` (:629) is the matching REST client.
 
 Here the pipeline IS a :class:`DocumentStore` (the distributed plan), and
-the server is a plain stdlib ``ThreadingHTTPServer`` adapter that turns
-each REST request into a 1-row batch query against that plan.  The HTTP
+the server IS a :class:`~servers.DocumentStoreServer` over it: the routes,
+the 1-row batch query per request, the error statuses and the stdlib HTTP
+runner are all ``servers.py``'s single JSON-over-POST core.  The HTTP
 surface exists for API parity and interactive debugging — the scale path
 is calling ``DocumentStore.retrieve_query`` with a DataFrame of MANY
 queries, which answers them all in one distributed job instead of one job
@@ -20,23 +21,21 @@ is ``urllib`` — both stdlib, so this works in a hermetic executor image.
 from __future__ import annotations
 
 import json
-import threading
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable, Iterable, Sequence
 
-import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from pathwaydataframework_spark.internals.table import Table
 from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
+from pathwaydataframework_spark.xpacks.llm.servers import DocumentStoreServer
 
 __all__ = ["VectorStoreServer", "SlidesVectorStoreServer", "VectorStoreClient"]
 
 
-class VectorStoreServer:
-    """Reference VectorStoreServer (vector_store.py:38): a DocumentStore
-    plus a REST facade.
+class VectorStoreServer(DocumentStoreServer):
+    """Reference VectorStoreServer (vector_store.py:38): a
+    :class:`DocumentStoreServer` over the DocumentStore it builds.
 
     Args mirror the reference: ``docs`` (binary ``data`` + ``_metadata``
     sources), ``embedder`` (Column→Column; default the hashing embedder via
@@ -54,60 +53,17 @@ class VectorStoreServer:
         *,
         dim: int = 64,
     ):
-        self.store = DocumentStore(
-            docs,
-            retriever_factory=index_factory,
-            parser=parser,
-            splitter=splitter,
-            doc_post_processors=doc_post_processors,
-            embedder=embedder,
-            dim=dim,
+        super().__init__(
+            document_store=DocumentStore(
+                docs,
+                retriever_factory=index_factory,
+                parser=parser,
+                splitter=splitter,
+                doc_post_processors=doc_post_processors,
+                embedder=embedder,
+                dim=dim,
+            )
         )
-        self._spark = self.store.chunked_docs.sparkSession
-        self._server: ThreadingHTTPServer | None = None
-        self._thread: threading.Thread | None = None
-
-    # -- one-request batch queries ------------------------------------------
-
-    def _one_query_df(self, payload: dict) -> DataFrame:
-        return self._spark.createDataFrame(
-            [
-                (
-                    0,
-                    payload.get("query", ""),
-                    int(payload.get("k", 3)),
-                    payload.get("metadata_filter"),
-                    payload.get("filepath_globpattern"),
-                )
-            ],
-            "query_id long, query string, k int, "
-            "metadata_filter string, filepath_globpattern string",
-        )
-
-    def _handle(self, route: str, payload: dict):
-        if route == "/v1/retrieve":
-            row = self.store.retrieve_query(self._one_query_df(payload)).first()
-            return [
-                {"dist": h["dist"], "text": h["text"],
-                 "metadata": json.loads(h["metadata"] or "{}")}
-                for h in (row["result"] if row else [])
-            ]
-        if route == "/v1/statistics":
-            row = self.store.statistics_query(
-                self._spark.range(1).select(F.lit(0).alias("query_id"))
-            ).first()
-            r = row["result"]
-            return {
-                "file_count": r["file_count"],
-                "last_modified": r["last_modified"],
-                "last_indexed": r["last_indexed"],
-            }
-        if route == "/v1/inputs":
-            row = self.store.inputs_query(self._one_query_df(payload)).first()
-            return [json.loads(m or "{}") for m in (row["result"] if row else [])]
-        raise KeyError(route)
-
-    # -- server lifecycle ----------------------------------------------------
 
     def run_server(
         self,
@@ -119,47 +75,10 @@ class VectorStoreServer:
         # the engine's own UDF-cache concern here
     ):
         """Start the REST facade.  ``threaded=True`` (default) serves from a
-        daemon thread and returns immediately; ``port=0`` picks a free port
-        (read it back from ``.port``).  Reference run_server
-        (vector_store.py:456)."""
-        outer = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def do_POST(self):  # noqa: N802 — http.server API
-                length = int(self.headers.get("Content-Length", 0))
-                try:
-                    payload = json.loads(self.rfile.read(length) or b"{}")
-                    body = json.dumps(outer._handle(self.path, payload)).encode()
-                    status = 200
-                except KeyError:
-                    body, status = b'{"error": "unknown route"}', 404
-                except Exception as exc:  # surface errors as JSON, not a stack
-                    body = json.dumps({"error": str(exc)}).encode()
-                    status = 500
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def log_message(self, *args):  # silence per-request stderr noise
-                pass
-
-        self._server = ThreadingHTTPServer((host, port), Handler)
-        self.host, self.port = self._server.server_address[:2]
-        if threaded:
-            self._thread = threading.Thread(
-                target=self._server.serve_forever, daemon=True
-            )
-            self._thread.start()
-            return self._thread
-        self._server.serve_forever()
-
-    def shutdown(self):
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
+        daemon thread and returns it; ``port=0`` picks a free port (read it
+        back from ``.port``).  Reference run_server (vector_store.py:456)."""
+        self.host, self.port = host, port
+        return self.run(threaded=threaded)
 
     def __repr__(self):
         return f"{type(self).__name__}({self.store.retriever_factory!r})"

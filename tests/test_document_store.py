@@ -181,6 +181,10 @@ def test_statistics_and_inputs_queries(spark, docs_df):
     out = {r["query_id"]: r["result"] for r in store.inputs_query(fq).collect()}
     assert len(out[0]) == 2 and len(out[1]) == 4
     assert all(json.loads(m)["owner"] == "alice" for m in out[0])
+    # zero queries: an empty answer with the schema of a non-empty one
+    empty = store.inputs_query(fq.limit(0))
+    assert empty.collect() == []
+    assert empty.dtypes == store.inputs_query(fq).dtypes
 
 
 def test_python_parser_and_splitter_fallback(spark, docs_df):
@@ -216,6 +220,9 @@ def test_slides_store_parsed_documents_query(spark, docs_df):
     res = store.parsed_documents_query(q).collect()[0]["result"]
     assert len(res) == 2
     assert all(json.loads(m)["path"].endswith(".txt") for m in res)
+    empty = store.parsed_documents_query(q.limit(0))
+    assert empty.collect() == []
+    assert empty.dtypes == store.parsed_documents_query(q).dtypes
 
 
 # -- REST facade -------------------------------------------------------------
@@ -239,6 +246,53 @@ def test_vector_store_server_roundtrip(spark, docs_df):
         assert stats["file_count"] == 4
         inputs = client.get_input_files(metadata_filter="owner == `alice`")
         assert len(inputs) == 2
+    finally:
+        server.shutdown()
+
+
+def _raw_post(server, route: str, body: bytes, headers: dict) -> tuple[int, dict]:
+    import http.client
+
+    conn = http.client.HTTPConnection(server.host, server.port, timeout=90)
+    try:
+        conn.request("POST", route, body=body, headers=headers)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+    finally:
+        conn.close()
+
+
+def test_vector_store_server_malformed_requests_answer_400(docs_df):
+    server = VectorStoreServer(docs_df)
+    server.run_server(port=0)
+    try:
+        status, body = _raw_post(server, "/v1/retrieve", b"", {"Content-Length": "abc"})
+        assert status == 400 and "abc" in body["error"]
+        status, body = _raw_post(server, "/v1/retrieve", b'[1, 2]', {})
+        assert status == 400 and "JSON object" in body["error"]
+        bad_filter = json.dumps({"query": "rows", "metadata_filter": "path =="})
+        status, body = _raw_post(server, "/v1/retrieve", bad_filter.encode(), {})
+        assert status == 400 and "metadata filter" in body["error"]
+        # the server still answers well-formed requests afterwards
+        status, body = _raw_post(server, "/v1/statistics", b"{}", {})
+        assert status == 200 and body["file_count"] == 4
+    finally:
+        server.shutdown()
+
+
+def test_vector_store_server_unknown_route_404_handler_error_500(docs_df, monkeypatch):
+    server = VectorStoreServer(docs_df)
+
+    def broken(_queries):
+        raise KeyError("query_id")
+
+    monkeypatch.setattr(server.store, "retrieve_query", broken)
+    server.run_server(port=0)
+    try:
+        status, body = _raw_post(server, "/v1/nope", b"{}", {})
+        assert (status, body) == (404, {"error": "unknown route"})
+        status, body = _raw_post(server, "/v1/retrieve", b'{"query": "rows"}', {})
+        assert status == 500 and "query_id" in body["error"]
     finally:
         server.shutdown()
 

@@ -18,6 +18,20 @@ def _post(url: str, payload: str) -> int:
         return resp.status
 
 
+def _raw_status(url: str, body: bytes, headers: dict) -> int:
+    """POST with exactly these headers, so a test can send a bad one."""
+    import http.client
+    import urllib.parse
+
+    parts = urllib.parse.urlsplit(url)
+    conn = http.client.HTTPConnection(parts.hostname, parts.port, timeout=10)
+    try:
+        conn.request("POST", parts.path or "/", body=body, headers=headers)
+        return conn.getresponse().status
+    finally:
+        conn.close()
+
+
 def test_http_read_ingests_posted_rows(spark, tmp_path):
     table, srv = sources.http.read(
         spark, schema="k string, v long", spool_dir=str(tmp_path / "spool")
@@ -31,6 +45,7 @@ def test_http_read_ingests_posted_rows(spark, tmp_path):
             raise AssertionError("expected HTTP 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400
+        assert _raw_status(srv.url, b"", {"Content-Length": "abc"}) == 400
         q = (
             table.df.writeStream.format("memory")
             .queryName("http_rows")
@@ -194,3 +209,23 @@ def test_rest_connector_shared_webserver_routes(spark, tmp_path):
         w1.server.stop()
         w2.server.stop()
         ws.stop()
+
+
+def test_rest_connector_malformed_requests_answer_400(spark, tmp_path):
+    # the PathwayWebserver dispatcher answers a request it cannot decode
+    # with 400 instead of dropping the connection; nothing is spooled
+    import pathwaydataframework_spark.sources.http_ingress as hi
+
+    spool = tmp_path / "bad_spool"
+    srv = hi.RestIngressServer(spark, schema="x long", spool_dir=str(spool))
+    try:
+        for body, headers in (
+            (b"", {"Content-Length": "abc"}),
+            (b"", {"Content-Length": "-1"}),
+            (b"[1]", {}),
+            (b"{x", {}),
+        ):
+            assert _raw_status(srv.url, body, headers) == 400
+        assert os.listdir(spool) == []
+    finally:
+        srv.stop()

@@ -276,6 +276,23 @@ def test_qa_summary_rest_server(spark, rag_app):
         server.shutdown()
 
 
+def test_rag_client_against_qa_summary_rest_server(spark, rag_app):
+    from pathwaydataframework_spark.xpacks.llm import RAGClient
+    from pathwaydataframework_spark.xpacks.llm.servers import QASummaryRestServer
+
+    server = QASummaryRestServer(rag_question_answerer=rag_app)
+    server.run(threaded=True)
+    try:
+        client = RAGClient(server.host, server.port, timeout=90)
+        assert client.answer("spark data movement?") == {"response": "ANSWER[spark]"}
+        hits = client.retrieve("spark", k=1)
+        assert len(hits) == 1 and "spark" in hits[0]["text"]
+        assert client.statistics()["file_count"] == 2
+        assert len(client.list_documents()) == 2
+    finally:
+        server.shutdown()
+
+
 def test_embedder_family_fallback_and_injection(spark):
     # reference xpacks/llm/embedders.py class family: offline fallback is
     # the deterministic hashing vector; injected clients run per Arrow batch

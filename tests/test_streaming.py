@@ -382,6 +382,12 @@ def test_monitoring_listener_and_http_metrics(spark, tmp_path):
         assert any(e["kind"] == "progress" for e in events)
     finally:
         pw.monitoring.detach(spark, mon)
+    # stop() closes the listening socket: the port can be bound again
+    import socket
+
+    with socket.socket() as sock:
+        sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        sock.bind(("127.0.0.1", srv.server_port))
 
 
 def _behavior_stream_files(spark, tmp_path, name):
