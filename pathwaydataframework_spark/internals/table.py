@@ -31,6 +31,39 @@ from pathwaydataframework_spark.internals.expression import (
 ID_COL = "_pw_id"
 
 
+def local_frame(spark: SparkSession, rows: Iterable, schema=None) -> DataFrame:
+    """A DataFrame over driver-local ``rows`` that Catalyst plans as a
+    ``LocalRelation`` (a ``LocalTableScan``), the relation Spark Connect
+    builds for ``createDataFrame(list)``.
+
+    Classic ``createDataFrame(list)`` gives an RDD-backed relation with
+    ``defaultParallelism`` partitions: every scan re-runs a Python worker
+    per partition, the planner has no size estimate so it never
+    broadcasts the frame, and a condition-less join of two such frames is
+    a CartesianProduct of P×P tasks (P³ for a chain of three).  Here
+    ``createDataFrame`` still checks the rows (a bad row raises here, as
+    before); the schema converts them, the JVM unpickles them in one
+    task, and they are collected once into a local relation: later scans
+    cost nothing and joins against it broadcast.
+    Scalar rows under an atomic schema keep the classic path."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    df = spark.createDataFrame(rows, schema)  # verifies the rows, as ever
+    if schema is not None and not isinstance(schema, (StructType, list, tuple)):
+        return df
+    struct = df.schema
+    sc = spark.sparkContext
+    pickled = sc.parallelize([struct.toInternal(r) for r in rows], 1)
+    serde = sc._jvm.SerDeUtil
+    objects = serde.toJavaArray(serde.pythonToJava(pickled._jrdd, True))
+    jss = spark._jsparkSession
+    rdd_df = jss.applySchemaToPythonRDD(objects.rdd(), struct.json())
+    return DataFrame(jss.createDataFrame(rdd_df.collectAsList(), rdd_df.schema()), spark)
+
+
 class TableContext(ResolutionContext):
     def __init__(self, table: "Table"):
         self._table = table
@@ -74,7 +107,7 @@ class Table:
         spark: SparkSession, rows: Iterable[tuple], schema, id_cols: Sequence[str] | None = None
     ) -> "Table":
         """Reference ``pw.debug.table_from_rows`` (debug/__init__.py:312)."""
-        return Table(spark.createDataFrame(list(rows), schema), id_cols=id_cols)
+        return Table(local_frame(spark, rows, schema), id_cols=id_cols)
 
     @staticmethod
     def empty(spark: SparkSession, **dtypes: str) -> "Table":

@@ -20,7 +20,7 @@ from typing import Any, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pathwaydataframework_spark.internals.table import Table
+from pathwaydataframework_spark.internals.table import Table, local_frame
 
 _FORMAT_BY_KIND = {
     "csv": "csv",
@@ -439,7 +439,7 @@ class debug:
         ``schema`` is a Spark DDL string or a Schema class with
         ``spark_schema``/``ddl``."""
         ddl = getattr(schema, "ddl", None) or getattr(schema, "spark_schema", None) or schema
-        return Table(spark.createDataFrame(rows, ddl))
+        return Table(local_frame(spark, rows, ddl))
 
     @staticmethod
     def table_to_pandas(table: Table, *, include_id: bool = False):

@@ -518,6 +518,29 @@ def test_chained_joins(spark):
     assert rows(chained) == [("x", "ten"), ("y", "twenty")]
 
 
+def test_from_rows_is_a_local_relation(spark):
+    # driver-local rows plan as a LocalTableScan: values (nested types and
+    # NULLs included) survive, bad rows still fail at construction, and a
+    # condition-less join of two such tables broadcasts instead of
+    # becoming a CartesianProduct
+    schema = "k long, tags array<string>, attrs map<string,double>, p struct<x:int,y:string>"
+    data = [(1, ["a", "b"], {"w": 1.5}, (7, "q")), (2, None, None, None)]
+    t = pw.Table.from_rows(spark, data, schema)
+    assert "LocalTableScan" in t.df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in t.df.orderBy("k").collect()] == [
+        (1, ["a", "b"], {"w": 1.5}, (7, "q")),
+        (2, None, None, None),
+    ]
+    assert pw.Table.from_rows(spark, [], "k long").df.count() == 0
+    with pytest.raises(TypeError):
+        pw.Table.from_rows(spark, [("not a long",)], "k long")
+    other = pw.Table.from_rows(spark, [("x",), ("y",)], "v string")
+    crossed = t.join(other).select(k=t.k, v=other.v)
+    plan = crossed.df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert len(rows(crossed)) == 4
+
+
 def test_chained_join_ambiguous_columns_rejected(spark):
     t1 = pw.Table.from_rows(spark, [(1, "p")], "k long, v string")
     t2 = pw.Table.from_rows(spark, [(1, "q")], "k long, v string")
