@@ -5,8 +5,11 @@ by a single-node tantivy index) and fuzzy_match_tables
 (stdlib/ml/smart_table_ops/_fuzzy_join.py:106).  Both become score joins over
 inverted-index tables here — no external index service, fully distributed:
 
-- BM25: term-frequency table (one row per doc×term) ⋈ idf table ⋈ query
-  terms → per-(query, doc) score sum → window top-k.  Every stage is a
+- BM25: two steps.  ``bm25_postings`` builds the term-frequency table (one
+  row per doc×term); ``bm25_rank`` scores it: postings ⋈ idf table ⋈ query
+  terms → per-(query, doc) score sum → window top-k.  ``bm25_scores``
+  composes them per call; ``DocumentStore`` scores postings it built once
+  per corpus snapshot with the same ``bm25_rank``.  Every stage is a
   hash-partitioned join/agg keyed on the term or the doc.
 - fuzzy match: shared-token inverted index join with idf-weighted scores,
   best match per left row via max_by.
@@ -15,7 +18,7 @@ inverted-index tables here — no external index service, fully distributed:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 
 from pathwaydataframework_spark.operators.dedup import _ensure_parallelism
 
@@ -24,83 +27,85 @@ def _tokens(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
-def doc_term_stats(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """(term_freqs, doc_lens) tables for BM25: tf per (doc, term), |d| per doc."""
-    base = _ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("__toks")
-    )
-    doc_lens = base.select("doc_id", F.size("__toks").alias("dl"))
-    tf = (
-        base.select("doc_id", F.explode("__toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    return tf, doc_lens
+def bm25_doc_length(text: Column) -> Column:
+    """|d|: the length of a text in BM25 tokens (the ``dl`` of
+    ``bm25_postings``)."""
+    return F.size(_tokens(text))
 
 
-def bm25_scores(
+def bm25_postings(
     docs: DataFrame,
-    queries: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query",
+    keep: tuple[str, ...] = (),
+    terms: DataFrame | None = None,
+) -> DataFrame:
+    """BM25 postings: one (doc_id, term, dl, tf, *keep) row per distinct
+    term of each doc, where dl = |d| in tokens and ``keep`` columns ride
+    along per doc.  With ``terms`` (one ``term`` column), only those terms
+    are kept, filtered map-side on the exploded tokens BEFORE the shuffle,
+    so the only corpus-wide exchange carries matching-term occurrences —
+    not the full inverted index.  dl rides through the explode as a
+    constant per doc, which keeps a doc-lengths join off the score path."""
+    occurrences = _ensure_parallelism(docs).select(
+        F.col(id_col).alias("doc_id"), *keep, _tokens(F.col(text_col)).alias("__toks")
+    ).select("doc_id", *keep, F.size("__toks").alias("dl"), F.explode("__toks").alias("term"))
+    if terms is not None:
+        occurrences = occurrences.join(F.broadcast(terms), on="term")
+    return occurrences.groupBy("doc_id", "term", "dl", *keep).agg(
+        F.count(F.lit(1)).alias("tf")
+    )
+
+
+def bm25_query_terms(
+    queries: DataFrame, *, query_id_col: str = "query_id", query_text_col: str = "query"
+) -> DataFrame:
+    """(query_id, term): the distinct terms of each query."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.explode(F.array_distinct(_tokens(F.col(query_text_col)))).alias("term"),
+    )
+
+
+def bm25_corpus_stats(docs: DataFrame, dl: Column) -> Column:
+    """N and avgdl of ``docs`` (``dl`` its length column) as ONE scalar
+    subquery column, struct-packed so the subquery is referenced exactly
+    once; coalesce covers the empty corpus (e.g. a filtered DocumentStore
+    subset): no rows can score, but the plan must still build — any finite
+    avgdl works."""
+    return docs.agg(
+        F.struct(
+            F.count(F.lit(1)).cast("double").alias("__n"),
+            F.coalesce(F.avg(dl), F.lit(1.0)).alias("__avgdl"),
+        ).alias("__stats")
+    ).scalar()
+
+
+def bm25_rank(
+    postings: DataFrame,
+    qterms: DataFrame,
+    stats: Column,
+    *,
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Top-k BM25 docs per query: (query_id, doc_id, score, rank).
+    """The BM25 scoring step: top-k docs per query, (query_id, doc_id,
+    score, rank), from the ``bm25_postings`` of a corpus restricted to the
+    query terms, the ``bm25_query_terms`` and the ``bm25_corpus_stats`` of
+    that corpus.
 
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)); score = Σ_t idf·tf·(k1+1) /
     (tf + k1·(1 - b + b·dl/avgdl)).  Deterministic tie-break on doc_id.
     """
-    qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(_tokens(F.col(query_text_col)))).alias("term"),
-    )
-    qt = qterms.select("term").distinct()
-    base = _ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("__toks")
-    )
-    # Postings restricted to the query's terms BEFORE any shuffle: the
-    # broadcast filter runs map-side on the exploded tokens, so the only
-    # corpus-wide exchange carries matching-term occurrences — not the full
-    # inverted index.  dl rides through the explode as a constant per doc,
-    # which removes the doc_lens join from the score path entirely.
-    tf_q = (
-        base.select(
-            "doc_id", F.size("__toks").alias("dl"), F.explode("__toks").alias("term")
-        )
-        .join(F.broadcast(qt), on="term")
-        .groupBy("doc_id", "term", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        # feeds BOTH the df aggregation and the score join; tiny after the
-        # term filter, so the materialization is near-free
-        .localCheckpoint(eager=True)
-    )
-    # N and avgdl folded into the job as ONE corpus-scan 1-row agg — no
-    # driver collects, and one fewer corpus scan than the separate
-    # count()/avg() jobs.  r15: attached as a SCALAR SUBQUERY column
-    # (struct-packed so the subquery is referenced exactly once) instead
-    # of a crossJoin with the broadcast 1-row frame — same single corpus
-    # scan, but the per-term idf build loses its BroadcastNestedLoopJoin
-    # node (VERDICT r14 item 6; plans/r15/q_bm25_{before,after}.txt).
-    # coalesce covers the empty corpus (e.g. a filtered DocumentStore
-    # subset): no rows can score, but the plan below must still build —
-    # any finite avgdl works.
-    stats = base.agg(
-        F.struct(
-            F.count(F.lit(1)).cast("double").alias("__n"),
-            F.coalesce(F.avg(F.size("__toks")), F.lit(1.0)).alias("__avgdl"),
-        ).alias("__stats")
-    ).scalar()
-    # df per query term from the filtered postings — identical to the
-    # full-index df for those terms, without the full-index groupBy
+    # df per query term from the restricted postings — identical to the
+    # full-index df for those terms, without the full-index groupBy.  The
+    # stats attach as a scalar subquery column, not a crossJoin with a
+    # 1-row frame: no BroadcastNestedLoopJoin on the per-term idf build
+    # (plans/r15/q_bm25_{before,after}.txt).
     idf = (
-        tf_q.groupBy("term")
+        postings.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .withColumn("__stats", stats)
         .select(
@@ -114,7 +119,7 @@ def bm25_scores(
         )
     )
     scored = (
-        tf_q.join(F.broadcast(idf), on="term")
+        postings.join(F.broadcast(idf), on="term")
         .join(F.broadcast(qterms), on="term")
         .withColumn(
             "s",
@@ -131,6 +136,35 @@ def bm25_scores(
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
     )
+
+
+def bm25_scores(
+    docs: DataFrame,
+    queries: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    query_id_col: str = "query_id",
+    query_text_col: str = "query",
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """Top-k BM25 docs per query: (query_id, doc_id, score, rank) — the
+    postings of the query terms, then ``bm25_rank``."""
+    qterms = bm25_query_terms(
+        queries, query_id_col=query_id_col, query_text_col=query_text_col
+    )
+    # feeds BOTH the df aggregation and the score join; tiny after the
+    # term filter, so the materialization is near-free
+    tf_q = bm25_postings(
+        docs, id_col=id_col, text_col=text_col, terms=qterms.select("term").distinct()
+    ).localCheckpoint(eager=True)
+    # N and avgdl: ONE corpus-scan 1-row agg folded into the job — no
+    # driver collects, one fewer corpus scan than count()/avg() jobs
+    toks = _ensure_parallelism(docs).select(_tokens(F.col(text_col)).alias("__toks"))
+    stats = bm25_corpus_stats(toks, F.size("__toks"))
+    return bm25_rank(tf_q, qterms, stats, k=k, k1=k1, b=b)
 
 
 def fuzzy_match_tables(

@@ -28,14 +28,22 @@ from pyspark.sql import SparkSession
 from pathwaydataframework_spark.internals.table import Table
 
 
+def read_body(handler) -> bytes:
+    """The body POSTed to a ``BaseHTTPRequestHandler``.  Raises
+    ``ValueError`` — the client's error, answered 400 — for a Content-Length
+    that is not an integer or is negative (a negative read would block until
+    the client disconnects)."""
+    length = int(handler.headers.get("Content-Length", 0))
+    if length < 0:
+        raise ValueError(f"negative Content-Length: {length}")
+    return handler.rfile.read(length)
+
+
 def read_json_object(handler) -> dict:
     """The JSON object POSTed to a ``BaseHTTPRequestHandler``.  Raises
     ``ValueError`` — the client's error, answered 400 — for a bad
     Content-Length, a body that is not JSON, or JSON that is not an object."""
-    length = int(handler.headers.get("Content-Length", 0))
-    if length < 0:
-        raise ValueError(f"negative Content-Length: {length}")
-    payload = json.loads(handler.rfile.read(length) or b"{}")
+    payload = json.loads(read_body(handler) or b"{}")
     if not isinstance(payload, dict):
         raise ValueError("request body must be a JSON object")
     return payload
@@ -80,7 +88,7 @@ class HttpIngressServer:
         class Handler(BaseHTTPRequestHandler):
             def do_POST(self) -> None:  # noqa: N802 — stdlib API name
                 try:
-                    body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
+                    body = read_body(self)
                     # validate: each non-empty line must be a JSON object
                     lines = [ln for ln in body.decode("utf-8").splitlines() if ln.strip()]
                     for ln in lines:

@@ -14,34 +14,51 @@ Spark-first restatement: every pipeline stage is a lazy DataFrame transform
 - plain-Python parsers/splitters (langchain-style ``str -> list[(text,
   meta)]``, the reference's UDF contract) are accepted too and wrapped in
   ONE Arrow-batched mapInPandas stage;
-- the index is a deferred distributed join plan (operators/ml_index.py) —
-  not an in-RAM service;
+- the index is a corpus SNAPSHOT, built once per input version and probed
+  by every query endpoint (the reference's index is a live in-RAM service
+  the engine updates as documents change).  The snapshot is the chunk
+  table (chunk_id, text, metadata, BM25 length ``dl``, and the embedding
+  for vector retrievers), the BM25 postings (chunk, term, tf, metadata),
+  the parsed documents' metadata and the one-row statistics, each
+  materialized with ``localCheckpoint`` on the executors.  Its version is
+  the (path, mtime, size) of every input file of the doc frames, checked on
+  every request: a changed file rebuilds the snapshot and releases the old
+  one; a frame with no input files is immutable and keeps its snapshot.
+  The check and the build run under a lock, so concurrent first requests
+  build one snapshot.  A request then only plans a probe: BM25 scores
+  the postings of the query terms (``ranking.bm25_rank``, the scoring step
+  of ``ranking.bm25_scores``), vector retrievers scan the embedded chunks;
 - metadata filtering: the reference evaluates a JMESPath string per row in
   Python (document_store.py:358,410).  Here the SAME filter grammar subset
   (``field == `lit```, ``!=``/``<``/``<=``/``>``/``>=``, ``contains(field,
   'x')``, ``globmatch('pat', path)``, ``&&``/``||``/``!``, parens) is
-  TRANSLATED ONCE into a Catalyst boolean over the metadata JSON column, so
-  the filter runs JVM-side and can prune the corpus scan.  Retrieval with a
-  filter ranks over the FILTERED corpus (top-k among eligible chunks, same
-  contract as the reference's filtered index query).
+  TRANSLATED ONCE into a Catalyst boolean over the metadata JSON column and
+  applied to the snapshot's frames, so it runs JVM-side.  Retrieval with a
+  filter ranks over the FILTERED corpus (top-k among eligible chunks; BM25's
+  N, avgdl and df are those of the filtered chunks), the contract of the
+  reference's filtered index query.
 
-Scale notes: queries are grouped by their merged filter string and the
-corpus is filtered once per DISTINCT filter (collected on the driver — the
-number of distinct filter strings is bounded by the number of query
-templates, not query rows).  Each group's retrieval is the retriever's own
-broadcast-probe plan, so the corpus is never shuffled per query.
+Scale notes: queries are grouped by their merged filter string (read on the
+driver with no Spark job for a local query frame, in one job otherwise —
+the number of distinct filter strings is bounded by the number of query
+templates, not query rows), and each group probes the snapshot once.  The
+queries broadcast to the postings and chunks, so the corpus is never
+shuffled per query; only the postings of the query terms are.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+from dataclasses import dataclass, replace
 from functools import reduce
 from typing import Callable, Iterable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from pathwaydataframework_spark.internals.table import Table
+from pathwaydataframework_spark.internals.table import Table, local_frame
+from pathwaydataframework_spark.operators import ranking
 from pathwaydataframework_spark.operators.embedders import HashingEmbedder
 from pathwaydataframework_spark.operators.ml_index import (
     BM25Index,
@@ -304,6 +321,90 @@ def _python_stage(fn: Callable, src: DataFrame, in_col: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# the corpus snapshot every query endpoint probes
+
+
+def _input_version(frames: Sequence[DataFrame]) -> tuple:
+    """(path, mtime, size) of every file the doc frames read — their
+    ``inputFiles()`` — after re-listing their file sources, so a file
+    added, removed or rewritten since the last call changes the version.
+    Frames with no input files add nothing: they are immutable."""
+    files = []
+    for frame in frames:
+        spark = frame.sparkSession
+        leaves = frame._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() != "LogicalRelation":
+                continue
+            relation = leaf.relation()
+            if relation.getClass().getSimpleName() == "HadoopFsRelation":
+                relation.location().refresh()  # the listing is cached per frame
+        conf = spark._jsc.hadoopConfiguration()
+        for name in frame.inputFiles():
+            path = spark._jvm.org.apache.hadoop.fs.Path(name)
+            status = path.getFileSystem(conf).getFileStatus(path)
+            files.append((name, status.getModificationTime(), status.getLen()))
+    return tuple(sorted(files))
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """The store's corpus at one input version, materialized on the
+    executors (never collected to the driver, except the one stats row).
+
+    ``chunks``: chunk_id, text, metadata, dl (BM25 length in tokens) and,
+    for vector retrievers, the chunk embedding.  ``postings`` (BM25 only):
+    ``ranking.bm25_postings`` of the chunks — doc_id (the chunk id), term,
+    dl, tf, metadata.  ``docs``: the metadata of each parsed document.
+    ``stats``: one local row — file_count, last_modified, last_indexed."""
+
+    version: tuple
+    chunks: DataFrame
+    postings: DataFrame | None
+    docs: DataFrame
+    stats: DataFrame
+
+    def where(self, keep: Column) -> "_Snapshot":
+        """The snapshot restricted to the chunks and documents whose
+        metadata satisfies ``keep``."""
+        return replace(
+            self,
+            chunks=self.chunks.filter(keep),
+            postings=None if self.postings is None else self.postings.filter(keep),
+            docs=self.docs.filter(keep),
+        )
+
+    def release(self) -> None:
+        """Drop the checkpointed blocks from the executors."""
+        for frame in (self.chunks, self.postings, self.docs):
+            if frame is not None:  # a localCheckpoint plan is one LogicalRDD
+                frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+class _SnapshotBM25(BM25Index):
+    """A BM25Index over a snapshot's chunks that ranks from the snapshot's
+    postings with ``ranking.bm25_rank`` instead of re-tokenizing the chunks
+    per query.  Chunks and postings carry the same metadata filter, so N,
+    avgdl and df are those of the filtered corpus, as in ``bm25_scores``
+    over the filtered chunks."""
+
+    def __init__(self, chunks: DataFrame, postings: DataFrame):
+        super().__init__(chunks, id_col="chunk_id", text_col="text")
+        self._postings = postings
+
+    def query(self, queries: DataFrame, k: int = 10, *, query_id_col: str = "query_id",
+              query_text_col: str = "query") -> DataFrame:
+        qterms = ranking.bm25_query_terms(
+            queries, query_id_col=query_id_col, query_text_col=query_text_col
+        )
+        # a semi join needs no distinct terms, so no shuffle of the queries
+        tf_q = self._postings.join(F.broadcast(qterms), on="term", how="left_semi")
+        stats = ranking.bm25_corpus_stats(self._docs, F.col("dl"))
+        return ranking.bm25_rank(tf_q, qterms, stats, k=k)
+
+
+# --------------------------------------------------------------------------
 
 
 class DocumentStore:
@@ -353,6 +454,8 @@ class DocumentStore:
         self.splitter = splitter
         self.doc_post_processors = list(doc_post_processors or [])
         self.embedder = embedder or HashingEmbedder(dim=dim)
+        self._lock = threading.Lock()
+        self._snap: _Snapshot | None = None
         self.build_pipeline()
 
     # -- pipeline stages (each overridable, mirroring the reference) -------
@@ -450,10 +553,39 @@ class DocumentStore:
         self.parsed_docs = self.parse_documents(self.input_docs)
         self.post_processed_docs = self.post_process_docs(self.parsed_docs)
         self.chunked_docs = self.split_docs(self.post_processed_docs)
+
+    # -- the snapshot -------------------------------------------------------
+
+    def _snapshot(self) -> _Snapshot:
+        """The corpus snapshot of the current input version, built on the
+        first call and again whenever an input file changes (the old one
+        is released).  The check and the build run under the store's lock,
+        so concurrent first requests build it once."""
+        with self._lock:
+            version = _input_version(self._doc_frames)
+            if self._snap is None or self._snap.version != version:
+                old, self._snap = self._snap, self._build_snapshot(version)
+                if old is not None:
+                    old.release()
+            return self._snap
+
+    def _build_snapshot(self, version: tuple) -> _Snapshot:
+        text = F.col("text")
+        cols = ["chunk_id", "text", "metadata", ranking.bm25_doc_length(text).alias("dl")]
+        bm25 = isinstance(self.retriever_factory, TantivyBM25Factory)
+        if not bm25:
+            cols.append(self.embedder(text).alias("embedding"))
+        chunks = self.chunked_docs.select(*cols).localCheckpoint(eager=True)
+        postings = None
+        if bm25:
+            postings = ranking.bm25_postings(
+                chunks, id_col="chunk_id", text_col="text", keep=("metadata",)
+            ).localCheckpoint(eager=True)
+        docs = self.parsed_docs.select("metadata").localCheckpoint(eager=True)
+        # the reference build_pipeline keeps the same running reduce
+        # (document_store.py:315)
         meta = F.col("metadata")
-        # one-row stats frame, computed lazily (reference build_pipeline
-        # keeps the same running reduce, document_store.py:315)
-        self.stats = self.parsed_docs.agg(
+        stats = docs.agg(
             F.count(F.lit(1)).alias("file_count"),
             F.max(F.get_json_object(meta, "$.modified_at").cast("long")).alias(
                 "last_modified"
@@ -462,28 +594,34 @@ class DocumentStore:
                 "last_indexed"
             ),
         )
+        stats = local_frame(docs.sparkSession, stats.collect(), stats.schema)
+        return _Snapshot(version, chunks, postings, docs, stats)
+
+    @property
+    def stats(self) -> DataFrame:
+        """The one-row corpus statistics of the current snapshot, a local
+        frame: (file_count, last_modified, last_indexed)."""
+        return self._snapshot().stats
 
     # -- retrieval ----------------------------------------------------------
 
-    def _retriever(self, corpus: DataFrame):
-        """(retriever, indexed frame) over ``corpus``'s chunks: BM25 over
-        the chunk text, or the factory's KNN index over the embedder's
-        chunk vectors."""
-        slim = corpus.select("chunk_id", "text", "metadata")
+    def _retriever(self, snap: _Snapshot):
+        """(retriever, indexed frame) over ``snap``'s chunks: BM25 over
+        their postings, or the factory's KNN index over their embeddings."""
+        chunks = snap.chunks.drop("dl")
         factory = self.retriever_factory
         if isinstance(factory, TantivyBM25Factory):
-            return BM25Index(slim, id_col="chunk_id", text_col="text"), slim
-        embedded = slim.withColumn("embedding", self.embedder(F.col("text")))
+            return _SnapshotBM25(snap.chunks, snap.postings), chunks
         kwargs = dict(factory.kwargs, id_col="chunk_id", vec_col="embedding")
-        return KNNIndex(embedded, **kwargs), embedded
+        return KNNIndex(chunks, **kwargs), chunks
 
     def _retrieve_group(
-        self, qgrp: DataFrame, corpus: DataFrame, k_max: int, query_id_col: str
+        self, qgrp: DataFrame, snap: _Snapshot, k_max: int, query_id_col: str
     ) -> DataFrame:
         """Top-k_max hits for one filter group: (query_id, score, rank,
-        text, metadata).  BM25 probes text directly; vector retrievers
-        embed the query text with the store's embedder first."""
-        inner, indexed = self._retriever(corpus)
+        text, metadata).  BM25 probes the postings with the query text;
+        vector retrievers embed it with the store's embedder first."""
+        inner, indexed = self._retriever(snap)
         if isinstance(inner, BM25Index):
             hits = inner.query(
                 qgrp.select(query_id_col, "query"),
@@ -534,35 +672,40 @@ class DocumentStore:
         )
 
     def _filter_groups(self, queries: DataFrame) -> list[tuple[str, int | None]]:
-        """DISTINCT (merged filter string, max k) pairs in ONE driver job
-        (driver-side; bounded by the number of query templates, not query
-        rows)."""
-        k_agg = (
-            F.max("k") if "k" in queries.columns else F.max(F.lit(None).cast("int"))
-        )
-        rows = (
-            queries.groupBy(self._merged_filter_col(queries).alias("f"))
-            .agg(k_agg.alias("k_max"))
-            .collect()
-        )
+        """DISTINCT (merged filter string, max k) pairs, bounded by the
+        number of query templates, not query rows.  A local frame's rows
+        are read on the driver with no Spark job; any other frame is
+        grouped in ONE job."""
+        k_col = F.col("k") if "k" in queries.columns else F.lit(None).cast("int")
+        pairs = queries.select(self._merged_filter_col(queries).alias("f"), k_col.alias("k"))
+        if queries.isLocal():
+            ks: dict[str, list[int]] = {}
+            for f, k in pairs.collect():
+                ks.setdefault(f, [])
+                if k is not None:
+                    ks[f].append(k)
+            return sorted((f, max(k, default=None)) for f, k in ks.items())
+        rows = pairs.groupBy("f").agg(F.max("k").alias("k_max")).collect()
         return sorted((r["f"], r["k_max"]) for r in rows)
 
     def _per_group(
         self, queries: DataFrame, answer: Callable[..., DataFrame | None]
     ) -> DataFrame | None:
         """The per-filter-group loop of every query endpoint: the union of
-        ``answer(group queries, filtered chunks, filtered parsed docs, max
-        k)`` over the distinct merged filters.  Groups answering None are
-        left out; None when none answers.  Zero queries form one unfiltered
-        empty group, so the answer keeps its schema."""
+        ``answer(group queries, snapshot restricted to the group's filter,
+        max k)`` over the distinct merged filters, all on one snapshot.
+        Groups answering None are left out; None when none answers.  Zero
+        queries form one unfiltered empty group, so the answer keeps its
+        schema."""
+        snap = self._snapshot()
         merged_col = self._merged_filter_col(queries)
         outs = []
         for merged, k_max in self._filter_groups(queries) or [("", None)]:
-            corpus, docs = self.chunked_docs, self.parsed_docs
-            if merged:
-                pred = translate_metadata_filter(merged, F.col("metadata"))
-                corpus, docs = corpus.filter(pred), docs.filter(pred)
-            out = answer(queries.filter(merged_col == F.lit(merged)), corpus, docs, k_max)
+            keep = (
+                translate_metadata_filter(merged, F.col("metadata"))
+                if merged else F.lit(True)
+            )
+            out = answer(queries.filter(merged_col == F.lit(merged)), snap.where(keep), k_max)
             if out is not None:
                 outs.append(out)
         return reduce(DataFrame.unionByName, outs) if outs else None
@@ -570,8 +713,8 @@ class DocumentStore:
     def _metadata_query(self, queries: DataFrame | Table, meta: Column) -> DataFrame:
         """Per query: the sorted ``meta`` of its filter's parsed documents."""
 
-        def answer(qgrp, _corpus, docs, _k):
-            metas = docs.select(meta.alias("m")).agg(
+        def answer(qgrp, snap, _k):
+            metas = snap.docs.select(meta.alias("m")).agg(
                 F.sort_array(F.collect_list("m")).alias("result")
             )
             return qgrp.crossJoin(F.broadcast(metas))
@@ -590,10 +733,10 @@ class DocumentStore:
         if "k" not in queries.columns:
             queries = queries.withColumn("k", F.lit(3))
 
-        def answer(qgrp, corpus, _docs, k_max):
+        def answer(qgrp, snap, k_max):
             if k_max is None:
                 return None
-            hits = self._retrieve_group(qgrp, corpus, int(k_max), query_id_col)
+            hits = self._retrieve_group(qgrp, snap, int(k_max), query_id_col)
             hits = hits.join(
                 F.broadcast(qgrp.select(query_id_col, "k")), on=query_id_col
             ).filter(F.col("rank") <= F.col("k"))
@@ -620,7 +763,7 @@ class DocumentStore:
         )
 
     def statistics_query(self, info_queries: DataFrame | Table) -> DataFrame:
-        """One result row per query with indexed-corpus statistics
+        """One result row per query with the snapshot's corpus statistics
         (reference statistics_query, document_store.py:323)."""
         q = _df(info_queries)
         return q.crossJoin(F.broadcast(self.stats)).select(
@@ -635,11 +778,11 @@ class DocumentStore:
 
     @property
     def index(self):
-        """The chunk-level retriever over the full (unfiltered) corpus —
-        reference ``DocumentStore.index`` (document_store.py:466)."""
+        """The chunk-level retriever over the full (unfiltered) corpus
+        snapshot — reference ``DocumentStore.index`` (document_store.py:466)."""
         from pathwaydataframework_spark.operators.ml_index import DataIndex
 
-        inner, indexed = self._retriever(self.chunked_docs)
+        inner, indexed = self._retriever(self._snapshot())
         return DataIndex(indexed, inner, id_col="chunk_id")
 
 

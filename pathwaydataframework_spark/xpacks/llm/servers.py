@@ -11,9 +11,12 @@ connector), ``DocumentStoreServer`` (:92), ``QARestServer`` (:140),
 request 400 (bad Content-Length, a body that is not a JSON object, a
 metadata filter the DSL rejects), and any other handler exception 500,
 each with a JSON ``{"error": ...}`` body.  A route turns its request into
-a 1-row batch query against the distributed plan — an interactive/parity
-surface, not the scale path (batch DataFrame endpoints answer many
-queries in one job).
+a 1-row local query frame (``internals.table.local_frame``) whose filter
+group the store reads with no Spark job, and the query probes the store's
+corpus snapshot, built once per input version; ``/v1/statistics`` reads
+the snapshot's one-row statistics.  This is an interactive/parity surface,
+not the scale path (batch DataFrame endpoints answer many queries in one
+plan).
 """
 
 from __future__ import annotations
@@ -23,8 +26,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import TYPE_CHECKING, Callable
 
-import pyspark.sql.functions as F
-
+from pathwaydataframework_spark.internals.table import local_frame
 from pathwaydataframework_spark.sources.http_ingress import read_json_object, send_reply
 from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
 
@@ -112,7 +114,8 @@ class BaseRestServer:
 
 
 def _query_frame(spark, payload: dict, *, query_key: str = "query"):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 0,
@@ -153,15 +156,7 @@ class DocumentStoreServer(BaseRestServer):
         ]
 
     def _statistics(self, payload: dict):
-        row = self.store.statistics_query(
-            self._spark.range(1).select(F.lit(0).alias("query_id"))
-        ).first()
-        r = row["result"]
-        return {
-            "file_count": r["file_count"],
-            "last_modified": r["last_modified"],
-            "last_indexed": r["last_indexed"],
-        }
+        return self.store.stats.first().asDict()
 
     def _inputs(self, payload: dict):
         row = self.store.inputs_query(_query_frame(self._spark, payload)).first()

@@ -5,14 +5,16 @@ split → embed → index pipeline and serves ``/v1/retrieve``,
 ``/v1/statistics``, ``/v1/inputs`` over its engine's HTTP connector;
 ``VectorStoreClient`` (:629) is the matching REST client.
 
-Here the pipeline IS a :class:`DocumentStore` (the distributed plan), and
-the server IS a :class:`~servers.DocumentStoreServer` over it: the routes,
-the 1-row batch query per request, the error statuses and the stdlib HTTP
-runner are all ``servers.py``'s single JSON-over-POST core.  The HTTP
-surface exists for API parity and interactive debugging — the scale path
-is calling ``DocumentStore.retrieve_query`` with a DataFrame of MANY
-queries, which answers them all in one distributed job instead of one job
-per request.
+Here the pipeline IS a :class:`DocumentStore`, and the server IS a
+:class:`~servers.DocumentStoreServer` over it: the routes, the 1-row local
+query frame per request, the error statuses and the stdlib HTTP runner are
+all ``servers.py``'s single JSON-over-POST core.  Each request probes the
+store's corpus snapshot, which is built once per input version (the
+reference's live index), so a request plans a probe and re-parses nothing.
+The HTTP surface exists for API parity and interactive debugging — the
+scale path is calling ``DocumentStore.retrieve_query`` with a DataFrame of
+MANY queries, which answers them all in one distributed plan instead of
+one plan per request.
 
 No external HTTP libraries: the server is ``http.server`` and the client
 is ``urllib`` — both stdlib, so this works in a hermetic executor image.

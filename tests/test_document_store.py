@@ -317,3 +317,161 @@ def test_retrieve_plan_no_cartesian(spark, docs_df):
     )
     plan = formatted_plan(store.retrieve_query(q))
     assert "CartesianProduct" not in plan
+
+
+# -- the corpus snapshot -----------------------------------------------------
+
+_QSCHEMA = (
+    "query_id long, query string, k int, metadata_filter string, "
+    "filepath_globpattern string"
+)
+
+
+def _write_corpus(spark, path: str, texts: list[str]) -> None:
+    rows = [
+        (t.encode(), json.dumps({"path": f"/corpus/{i}.txt", "owner": "alice"}))
+        for i, t in enumerate(texts)
+    ]
+    spark.createDataFrame(rows, "data binary, _metadata string").write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def test_snapshot_follows_rewritten_parquet_input(spark, tmp_path, docs_df):
+    path = str(tmp_path / "corpus.parquet")
+    _write_corpus(spark, path, ["spark joins tables", "pandas reads csv files"])
+    store = DocumentStore(spark.read.parquet(path))
+    q = spark.createDataFrame([(1, "joins", 1, None, None)], _QSCHEMA)
+
+    def top():
+        return [h["text"] for h in store.retrieve_query(q).collect()[0]["result"]]
+
+    assert top() == ["spark joins tables"]
+    first = store._snapshot()
+    assert store._snapshot() is first  # unchanged input: the same snapshot
+    _write_corpus(spark, path, ["flink joins streams", "duckdb", "polars frames"])
+    assert top() == ["flink joins streams"]
+    assert store.stats.first()["file_count"] == 3
+    assert store._snapshot() is not first
+    # the old snapshot's checkpointed blocks are released
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    old_rdd = first.chunks._jdf.queryExecution().analyzed().rdd().id()
+    assert old_rdd not in persisted
+    # a frame with no input files is immutable: it keeps its snapshot
+    frozen = DocumentStore(docs_df)
+    assert frozen._snapshot() is frozen._snapshot()
+
+
+def test_concurrent_first_requests_build_one_snapshot(spark, docs_df, monkeypatch):
+    import sys
+    import threading
+    import time
+
+    store = DocumentStore(docs_df)
+    build = store._build_snapshot
+    builds = []
+
+    def slow_build(version):
+        builds.append(version)
+        time.sleep(0.5)  # the other request arrives while this one builds
+        return build(version)
+
+    monkeypatch.setattr(store, "_build_snapshot", slow_build)
+    q = spark.createDataFrame([(1, "distributed queries", 2, None, None)], _QSCHEMA)
+    start = threading.Barrier(2)
+    answers = []
+
+    def request():
+        start.wait(timeout=60)
+        answers.append(store.retrieve_query(q).collect()[0]["result"])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=request) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(answers) == 2 and answers[0] == answers[1] and len(answers[0]) == 2
+
+
+def test_local_query_frame_and_statistics_run_no_job(spark, docs_df):
+    from pathwaydataframework_spark.internals.table import local_frame
+
+    store = DocumentStore(docs_df)
+    store._snapshot()
+    rows = [(1, "rows", 2, "owner == `alice`", None), (2, "rows", 3, None, None),
+            (3, "joins", 4, None, None)]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    q = local_frame(spark, rows, _QSCHEMA)
+    groups, jobs = jobs_of("pds_local_filter_groups", lambda: store._filter_groups(q))
+    assert jobs == []
+    assert groups == [("", 4), ("(owner == `alice`)", 2)]
+    # a distributed frame takes the one-job groupBy path to the same groups
+    rdd_q = spark.createDataFrame(rows, _QSCHEMA)
+    assert store._filter_groups(rdd_q) == groups
+    stats, jobs = jobs_of("pds_snapshot_stats", lambda: store.stats.first())
+    assert jobs == []
+    assert (stats["file_count"], stats["last_modified"], stats["last_indexed"]) == (4, 300, 400)
+
+
+@pytest.mark.parametrize("vector", [False, True], ids=["bm25", "knn"])
+def test_snapshot_answers_equal_per_request_plan(spark, docs_df, vector):
+    """The store's answers equal those of ranking over the filtered chunks
+    re-derived per request: ``bm25_scores`` for BM25, ``knn_bruteforce``
+    over freshly embedded chunks for KNN."""
+    from pathwaydataframework_spark.operators import ranking, similarity
+
+    kwargs = {}
+    if vector:
+        kwargs = dict(
+            retriever_factory=BruteForceKnnFactory(dim=32),
+            splitter=TokenCountSplitter(min_tokens=2, max_tokens=4),
+            dim=32,
+        )
+    store = DocumentStore(docs_df, **kwargs)
+    cases = [
+        (1, "distributed rows", 3, None, None),
+        (2, "rows partitions", 2, "owner == `alice`", "**/*.md"),
+    ]
+    got = {
+        r["query_id"]: [(h["dist"], h["text"]) for h in r["result"]]
+        for r in store.retrieve_query(spark.createDataFrame(cases, _QSCHEMA)).collect()
+    }
+    for qid, text, k, mf, glob in cases:
+        chunks = store.chunked_docs.select("chunk_id", "text", "metadata")
+        merged = merge_filter_strings(mf, glob)
+        if merged:
+            chunks = chunks.filter(translate_metadata_filter(merged, F.col("metadata")))
+        q = spark.createDataFrame([(qid, text)], "query_id long, query string")
+        if vector:
+            hits = similarity.knn_bruteforce(
+                chunks.withColumn("embedding", store.embedder(F.col("text"))),
+                q.select("query_id", store.embedder(F.col("query")).alias("embedding")),
+                id_col="chunk_id", vec_col="embedding", query_id_col="query_id",
+                query_vec_col="embedding", k=k, exclude_self=False,
+            ).withColumnRenamed("neighbor_id", "chunk_id")
+        else:
+            hits = ranking.bm25_scores(chunks, q, id_col="chunk_id", k=k).withColumnRenamed(
+                "doc_id", "chunk_id"
+            )
+        want = sorted(
+            (-r["score"], r["text"])
+            for r in hits.join(chunks, on="chunk_id").select("score", "text").collect()
+        )
+        assert got[qid] == want, (qid, got[qid], want)

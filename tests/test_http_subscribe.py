@@ -46,6 +46,7 @@ def test_http_read_ingests_posted_rows(spark, tmp_path):
         except urllib.error.HTTPError as e:
             assert e.code == 400
         assert _raw_status(srv.url, b"", {"Content-Length": "abc"}) == 400
+        assert _raw_status(srv.url, b"", {"Content-Length": "-1"}) == 400
         q = (
             table.df.writeStream.format("memory")
             .queryName("http_rows")
