@@ -10,8 +10,10 @@ the way the reference does —
   in-process registry;
 - ``StreamMonitor.metrics()`` returns the recorded rows (driver-side,
   bounded ring buffer — monitoring data, not pipeline data);
-- ``StreamMonitor.serve()`` exposes the same as JSON over a stdlib HTTP
-  server (the analogue of the reference's ``http_server.rs`` scrape
+- ``StreamMonitor.serve()`` exposes the same as JSON: GET ``/metrics`` and
+  ``/healthz`` routes on a private
+  :class:`~sources.http_ingress.PathwayWebserver`, the package's one HTTP
+  core (the analogue of the reference's ``http_server.rs`` scrape
   endpoint; Prometheus-style pull, zero extra dependencies).
 
 The registry is intentionally driver-side and bounded: progress events are
@@ -29,6 +31,8 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from pathwaydataframework_spark.sources.http_ingress import JSON, PathwayWebserver
+
 
 class StreamMonitor:
     """Bounded registry of streaming progress events + HTTP scrape server."""
@@ -37,7 +41,7 @@ class StreamMonitor:
         self._events: deque[dict[str, Any]] = deque(maxlen=max_events)
         self._lock = threading.Lock()
         self._listener: StreamingQueryListener | None = None
-        self._server = None
+        self._webserver: PathwayWebserver | None = None
 
     # -- collection --------------------------------------------------------
 
@@ -56,44 +60,22 @@ class StreamMonitor:
     # -- HTTP endpoint ------------------------------------------------------
 
     def serve(self, host: str = "127.0.0.1", port: int = 0):
-        """Start the metrics endpoint; returns the server (``.server_port``
-        for the bound port, ``.shutdown()`` to stop).  GET /metrics → JSON
-        list of progress events; GET /healthz → 200 ok."""
-        import http.server
-
-        monitor = self
-
-        class Handler(http.server.BaseHTTPRequestHandler):
-            def do_GET(self):  # noqa: N802 — stdlib handler API
-                if self.path == "/healthz":
-                    body = b"ok"
-                    ctype = "text/plain"
-                elif self.path == "/metrics":
-                    body = json.dumps(monitor.metrics()).encode()
-                    ctype = "application/json"
-                else:
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                self.send_response(200)
-                self.send_header("Content-Type", ctype)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def log_message(self, *args):  # quiet
-                pass
-
-        srv = http.server.ThreadingHTTPServer((host, port), Handler)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        self._server = srv
-        return srv
+        """Start the metrics endpoint; returns the stdlib server
+        (``.server_port`` for the bound port).  GET /metrics → JSON list of
+        progress events; GET /healthz → 200 ok; :meth:`stop` shuts it down."""
+        ws = PathwayWebserver(host, port, with_schema_endpoint=False)
+        ws.register("/healthz", ("GET",), lambda *_: (200, b"ok", "text/plain"))
+        ws.register(
+            "/metrics", ("GET",), lambda *_: (200, json.dumps(self.metrics()).encode(), JSON)
+        )
+        ws.start()
+        self._webserver = ws
+        return ws._server
 
     def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
+        if self._webserver is not None:
+            self._webserver.stop()
+            self._webserver = None
 
 
 class _ProgressListener(StreamingQueryListener):

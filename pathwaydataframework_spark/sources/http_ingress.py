@@ -1,17 +1,20 @@
-"""REST ingress — the reference's ``pw.io.http.read`` (io/http/__init__.py:28).
+"""The package's one HTTP core, and the REST ingress built on it.
 
-The reference runs an HTTP server whose POST bodies become stream rows.
-Spark-first shape: a tiny stdlib ``http.server`` on a daemon thread spools
-each accepted payload as a jsonlines file into a watch directory, and the
-table is a plain file-stream source over that directory — so the ingest
-path gets Structured Streaming's offsets/checkpointing for free, and the
-ingest rate is bounded by disk, not by the Python server (which only
-appends; parsing happens distributed, JVM-side, via the json reader).
+:class:`PathwayWebserver` (reference io/http/_server.py:329) is the only
+HTTP server in the package, and its dispatcher answers every route: the
+``pw.io.http.rest_connector`` routes (:class:`RestIngressServer`),
+``pw.io.http.read`` (:class:`HttpIngressServer`, a POST route ``/`` that
+answers 202), the JSON POST routes of ``xpacks.llm.servers.BaseRestServer``
+and the GET ``/metrics`` and ``/healthz`` routes of ``monitoring``.
 
-Files are written atomically (tmp name + rename) so the file source never
-lists a half-written spool file.  At cluster scale the spool directory
-lives on shared storage (s3a://...) and multiple ingress servers can spool
-into it concurrently — uuid names cannot collide.
+Ingress is Spark-first: an accepted payload is spooled as a jsonlines file
+into a watch directory (``python_connector.spool``, atomic tmp name +
+rename, so the file source never lists a half-written file), and the table
+is a plain file-stream source over that directory.  The ingest path gets
+Structured Streaming's offsets and checkpointing for free, and parsing
+happens distributed, JVM-side, via the json reader.  At cluster scale the
+spool directory lives on shared storage (s3a://...) and several servers
+can spool into it concurrently; uuid names cannot collide.
 """
 
 from __future__ import annotations
@@ -21,11 +24,25 @@ import os
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable
 from urllib.parse import parse_qsl, urlparse
 
 from pyspark.sql import SparkSession
 
 from pathwaydataframework_spark.internals.table import Table
+from pathwaydataframework_spark.sources.python_connector import spool
+
+# seconds a request may take to deliver its line, headers or body; a slower
+# POST body answers 408, so a truncated body cannot hold a handler thread
+READ_TIMEOUT_S = 30.0
+
+JSON = "application/json"
+
+Reply = tuple[int, bytes, str]  # status, body, content type
+
+
+def _error_reply(status: int, message: str) -> Reply:
+    return status, json.dumps({"error": message}).encode(), JSON
 
 
 def read_body(handler) -> bytes:
@@ -39,24 +56,117 @@ def read_body(handler) -> bytes:
     return handler.rfile.read(length)
 
 
-def read_json_object(handler) -> dict:
-    """The JSON object POSTed to a ``BaseHTTPRequestHandler``.  Raises
-    ``ValueError`` — the client's error, answered 400 — for a bad
-    Content-Length, a body that is not JSON, or JSON that is not an object."""
-    payload = json.loads(read_body(handler) or b"{}")
+def json_object(body: bytes | str) -> dict:
+    """The JSON object in a request body (an empty body is ``{}``).  Raises
+    ``ValueError`` — the client's error, answered 400 — for a body that is
+    not JSON, or JSON that is not an object."""
+    payload = json.loads(body or b"{}")
     if not isinstance(payload, dict):
         raise ValueError("request body must be a JSON object")
     return payload
 
 
-def send_reply(
-    handler, status: int, body: bytes = b"", content_type: str = "application/json"
-) -> None:
-    handler.send_response(status)
-    handler.send_header("Content-Type", content_type)
-    handler.send_header("Content-Length", str(len(body)))
-    handler.end_headers()
-    handler.wfile.write(body)
+class PathwayWebserver:
+    """Reference io/http/_server.py:329 — one host/port serving the routes
+    registered on it, e.g. several ``rest_connector`` routes, each with its
+    own spool directory and pending-request map.  ``with_cors`` is accepted
+    for call-shape parity and sends no CORS headers (DEVIATIONS #13).
+
+    A route is its methods plus a callable ``(method, query, body) ->
+    (status, body, content type)``; routes never touch the handler.  The
+    dispatcher owns the HTTP concerns: it routes by path (404), checks the
+    route's methods (405), reads a POST body (400 for a bad Content-Length,
+    408 when the body does not arrive within :data:`READ_TIMEOUT_S`),
+    writes the reply, and maps a route's exceptions: a ``ValueError`` is
+    the client's and answers 400, any other exception 500, each with a JSON
+    ``{"error": ...}`` body.
+
+    :meth:`register` adds a route, :meth:`start` starts serving on a daemon
+    thread (``port=0`` picks a free port, read back from ``.port``), and
+    :meth:`stop` shuts the server down and frees its port."""
+
+    def __init__(self, host: str, port: int, *, with_schema_endpoint: bool = True,
+                 with_cors: bool = False):
+        self.host = host
+        self.port = int(port)
+        self.with_schema_endpoint = with_schema_endpoint
+        self.with_cors = with_cors
+        self._routes: dict[str, tuple[frozenset, Callable[..., Reply], object]] = {}
+        self._server: ThreadingHTTPServer | None = None
+        self._thread: threading.Thread | None = None
+
+    def register(self, route: str, methods, fn: Callable[..., Reply],
+                 schema=None) -> None:
+        """Answer ``methods`` at ``route`` with ``fn(method, query, body)``;
+        ``schema`` is what ``/_schema`` lists for the route."""
+        self._routes[route] = (frozenset(m.upper() for m in methods), fn, schema)
+
+    def unregister(self, route: str) -> None:
+        self._routes.pop(route, None)
+
+    def _answer(self, handler, method: str) -> Reply:
+        url = urlparse(handler.path)
+        if self.with_schema_endpoint and url.path == "/_schema":
+            schemas = {r: str(s) for r, (_, _, s) in list(self._routes.items())}
+            return 200, json.dumps(schemas).encode(), JSON
+        route = self._routes.get(url.path)
+        if route is None:
+            return _error_reply(404, "unknown route")
+        methods, fn, _ = route
+        if method not in methods:
+            return _error_reply(405, f"method {method} not allowed")
+        try:
+            body = read_body(handler) if method == "POST" else b""
+        except TimeoutError:
+            return _error_reply(408, "request body timed out")
+        return fn(method, url.query, body)
+
+    def start(self) -> threading.Thread:
+        """Start serving, unless already serving; returns the serving thread."""
+        if self._server is not None:
+            return self._thread
+        outer = self
+
+        class Dispatcher(BaseHTTPRequestHandler):
+            timeout = READ_TIMEOUT_S
+
+            def _dispatch(self, method: str) -> None:
+                try:
+                    status, body, content_type = outer._answer(self, method)
+                except Exception as exc:  # noqa: BLE001 — answered, never dropped
+                    status = 400 if isinstance(exc, ValueError) else 500
+                    status, body, content_type = _error_reply(status, str(exc))
+                self.send_response(status)
+                self.send_header("Content-Type", content_type)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def do_POST(self) -> None:  # noqa: N802 — stdlib API name
+                self._dispatch("POST")
+
+            def do_GET(self) -> None:  # noqa: N802
+                self._dispatch("GET")
+
+            def log_message(self, *args) -> None:  # silence per-request noise
+                pass
+
+        self._server = ThreadingHTTPServer((self.host, self.port), Dispatcher)
+        self.host, self.port = self._server.server_address[:2]
+        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        self._thread.start()
+        return self._thread
+
+    @property
+    def url(self) -> str:
+        return f"http://{self.host}:{self.port}"
+
+    def stop(self) -> None:
+        if self._server is not None:
+            self._server.shutdown()
+            self._server.server_close()
+            self._thread.join(timeout=5)
+            self._server = None
 
 
 class HttpIngressServer:
@@ -83,48 +193,28 @@ class HttpIngressServer:
         self._schema = schema
         self._spool = spool_dir
         os.makedirs(spool_dir, exist_ok=True)
-        spool = self._spool
+        self._webserver = PathwayWebserver(host, port, with_schema_endpoint=False)
+        self._webserver.register("/", ("POST",), self._ingest)
+        self._webserver.start()
 
-        class Handler(BaseHTTPRequestHandler):
-            def do_POST(self) -> None:  # noqa: N802 — stdlib API name
-                try:
-                    body = read_body(self)
-                    # validate: each non-empty line must be a JSON object
-                    lines = [ln for ln in body.decode("utf-8").splitlines() if ln.strip()]
-                    for ln in lines:
-                        json.loads(ln)
-                except ValueError:  # bad Content-Length, utf-8 or JSON
-                    self.send_response(400)
-                    self.end_headers()
-                    return
-                name = uuid.uuid4().hex + ".jsonl"
-                tmp = os.path.join(spool, "." + name)
-                with open(tmp, "w", encoding="utf-8") as f:
-                    f.write("\n".join(lines) + "\n")
-                os.rename(tmp, os.path.join(spool, name))
-                self.send_response(202)
-                self.end_headers()
-
-            def log_message(self, *args) -> None:  # silence per-request noise
-                pass
-
-        self._server = ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
+    def _ingest(self, method: str, query: str, body: bytes) -> Reply:
+        # each non-empty line must be a JSON object, or nothing is spooled
+        lines = [ln for ln in body.decode("utf-8").splitlines() if ln.strip()]
+        for ln in lines:
+            json_object(ln)
+        spool(self._spool, lines)
+        return 202, b"", JSON
 
     @property
     def url(self) -> str:
-        host, port = self._server.server_address[:2]
-        return f"http://{host}:{port}/"
+        return self._webserver.url + "/"
 
     def table(self) -> Table:
         df = self._spark.readStream.schema(self._schema).json(self._spool)
         return Table(df)
 
     def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-        self._thread.join(timeout=5)
+        self._webserver.stop()
 
 
 class RestIngressServer:
@@ -142,7 +232,8 @@ class RestIngressServer:
 
     Requests always arrive through a :class:`PathwayWebserver`, as in the
     reference: the shared ``webserver`` when one is given, else a private
-    one on ``host``/``port`` that :meth:`stop` shuts down.
+    one on ``host``/``port``.  :meth:`stop` unregisters the route (it then
+    answers 404) and shuts a private webserver down.
     """
 
     def __init__(
@@ -165,49 +256,44 @@ class RestIngressServer:
         self._route = route
         self._timeout = response_timeout_s
         self._validator = request_validator
-        self._allowed = {m.upper() for m in methods}
         os.makedirs(spool_dir, exist_ok=True)
         self._pending: dict[str, threading.Event] = {}
         self._results: dict[str, object] = {}
         self._lock = threading.Lock()
         self._own_webserver = webserver is None
         self._webserver = webserver or PathwayWebserver(host, port)
-        self._webserver.register(route, self)
+        self._webserver.register(route, methods, self._process, schema)
+        self._webserver.start()
 
-    def _process(self, handler, payload: dict) -> None:
+    def _process(self, method: str, query: str, body: bytes) -> Reply:
         """Answer one request the webserver dispatched to this route."""
+        payload = json_object(body) if method == "POST" else dict(parse_qsl(query))
         if self._validator is not None:
             try:
                 verdict = self._validator(payload)
             except Exception as exc:  # noqa: BLE001 — validator contract
                 verdict = str(exc)
             if verdict is not None:
-                send_reply(handler, 400, str(verdict).encode("utf-8"), "text/plain")
-                return
+                return 400, str(verdict).encode("utf-8"), "text/plain"
         qid = uuid.uuid4().hex
         ev = threading.Event()
         with self._lock:
             self._pending[qid] = ev
         row = dict(payload)
         row["query_id"] = qid
-        name = qid + ".jsonl"
-        tmp = os.path.join(self._spool, "." + name)
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(json.dumps(row) + "\n")
-        os.rename(tmp, os.path.join(self._spool, name))
+        spool(self._spool, [json.dumps(row)], qid)
         if ev.wait(self._timeout):
             with self._lock:
                 result = self._results.pop(qid, None)
                 self._pending.pop(qid, None)
-            send_reply(handler, 200, json.dumps(result).encode("utf-8"))
-        else:
-            with self._lock:
-                # deliver() may race the timeout: it can store the result
-                # between ev.wait() expiring and this cleanup — pop BOTH
-                # maps so an abandoned result can't accumulate forever.
-                self._pending.pop(qid, None)
-                self._results.pop(qid, None)
-            send_reply(handler, 504)
+            return 200, json.dumps(result).encode("utf-8"), JSON
+        with self._lock:
+            # deliver() may race the timeout: it can store the result
+            # between ev.wait() expiring and this cleanup — pop BOTH
+            # maps so an abandoned result can't accumulate forever.
+            self._pending.pop(qid, None)
+            self._results.pop(qid, None)
+        return 504, b"", JSON
 
     @property
     def url(self) -> str:
@@ -257,6 +343,7 @@ class RestIngressServer:
         q = getattr(self, "_response_query", None)
         if q is not None:
             q.stop()
+        self._webserver.unregister(self._route)
         if self._own_webserver:
             self._webserver.stop()
 
@@ -307,80 +394,3 @@ def rest_connector(
     # expose the server handle for shutdown/url access
     writer.server = srv  # type: ignore[attr-defined]
     return table, writer
-
-
-class PathwayWebserver:
-    """Reference io/http/_server.py:329 — shared host/port configuration
-    for ``rest_connector``: several connectors can register distinct
-    routes on ONE webserver instance.  Each registered route keeps its own
-    spool directory and pending-request map.  The dispatcher is the one
-    request core of ``rest_connector``: it routes by path (404 when no
-    route matches), checks the route's methods (405), decodes the payload
-    (400 for a malformed request) and hands it to the route."""
-
-    def __init__(self, host: str, port: int, *, with_schema_endpoint: bool = True,
-                 with_cors: bool = False):
-        self.host = host
-        self.port = int(port)
-        self.with_schema_endpoint = with_schema_endpoint
-        self.with_cors = with_cors
-        self._routes: dict[str, RestIngressServer] = {}
-        self._server = None
-        self._thread = None
-
-    def _ensure_started(self) -> None:
-        if self._server is not None:
-            return
-        outer = self
-
-        class Dispatcher(BaseHTTPRequestHandler):
-            def _dispatch(self, method: str) -> None:
-                url = urlparse(self.path)
-                if outer.with_schema_endpoint and url.path == "/_schema":
-                    schemas = {r: str(s._schema) for r, s in outer._routes.items()}
-                    return send_reply(self, 200, json.dumps(schemas).encode())
-                srv = outer._routes.get(url.path)
-                if srv is None:
-                    return send_reply(self, 404)
-                if method not in srv._allowed:
-                    return send_reply(self, 405)
-                try:
-                    if method == "POST":
-                        payload = read_json_object(self)
-                    else:
-                        payload = dict(parse_qsl(url.query))
-                except ValueError as exc:
-                    return send_reply(self, 400, json.dumps({"error": str(exc)}).encode())
-                srv._process(self, payload)
-
-            def do_POST(self) -> None:  # noqa: N802
-                self._dispatch("POST")
-
-            def do_GET(self) -> None:  # noqa: N802
-                self._dispatch("GET")
-
-            def log_message(self, *args) -> None:
-                pass
-
-        self._server = ThreadingHTTPServer((self.host, self.port), Dispatcher)
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    @property
-    def url(self) -> str:
-        self._ensure_started()
-        host, port = self._server.server_address[:2]
-        return f"http://{host}:{port}"
-
-    def register(self, route: str, srv: "RestIngressServer") -> None:
-        self._routes[route] = srv
-        self._ensure_started()
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._thread.join(timeout=5)
-            self._server = None

@@ -4,8 +4,8 @@
 The reference runs the subject's ``run()`` on a dedicated connector thread
 and each ``self.next(...)`` call becomes a stream row.  Spark-first shape:
 the subject spools committed rows as jsonlines files into a watch
-directory (atomic tmp-name + rename, exactly like ``http_ingress``), and
-the returned table is a file-stream source over that directory — offsets,
+directory through :func:`spool` (atomic tmp-name + rename, the one spool
+writer ``http_ingress`` shares), and the returned table is a file-stream source over that directory — offsets,
 checkpointing and replay come from Structured Streaming, and JSON parsing
 happens distributed JVM-side, not in the producer thread.
 
@@ -24,6 +24,18 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from pathwaydataframework_spark.internals.table import Table
+
+
+def spool(spool_dir: str, lines: list[str], stem: str | None = None) -> None:
+    """Write ``lines`` into ``spool_dir`` as one jsonlines file, atomically:
+    under a dot-prefixed tmp name, then renamed, so a file-stream source
+    never lists a half-written file.  The file is ``stem`` (default a fresh
+    uuid) plus ``.jsonl``, so concurrent writers cannot collide."""
+    name = (stem or uuid.uuid4().hex) + ".jsonl"
+    tmp = os.path.join(spool_dir, "." + name)
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write("\n".join(lines) + "\n")
+    os.rename(tmp, os.path.join(spool_dir, name))
 
 
 class ConnectorSubject:
@@ -61,11 +73,7 @@ class ConnectorSubject:
             if not self._buf or self._spool is None:
                 return
             lines, self._buf = self._buf, []
-        name = uuid.uuid4().hex + ".jsonl"
-        tmp = os.path.join(self._spool, "." + name)
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("\n".join(lines) + "\n")
-        os.rename(tmp, os.path.join(self._spool, name))
+        spool(self._spool, lines)
 
     def close(self) -> None:
         self.commit()

@@ -4,17 +4,19 @@ Reference: ``BaseRestServer`` (:16, route registry over the engine's HTTP
 connector), ``DocumentStoreServer`` (:92), ``QARestServer`` (:140),
 ``QASummaryRestServer`` (:193), plus ``serve_callable`` (:227).
 
-:class:`BaseRestServer` is the one JSON-over-POST request core of
-``xpacks.llm``: every server here, ``VectorStoreServer`` included (it is a
-:class:`DocumentStoreServer`), answers through its handler on a stdlib
-``ThreadingHTTPServer``.  An unknown route answers 404, a malformed
-request 400 (bad Content-Length, a body that is not a JSON object, a
-metadata filter the DSL rejects), and any other handler exception 500,
-each with a JSON ``{"error": ...}`` body.  A route turns its request into
-a 1-row local query frame (``internals.table.local_frame``) whose filter
-group the store reads with no Spark job, and the query probes the store's
-corpus snapshot, built once per input version; ``/v1/statistics`` reads
-the snapshot's one-row statistics.  This is an interactive/parity surface,
+As in the reference, :class:`BaseRestServer` is a route registry over the
+package's one HTTP core, a :class:`~sources.http_ingress.PathwayWebserver`:
+every server here, ``VectorStoreServer`` included (it is a
+:class:`DocumentStoreServer`), registers JSON-over-POST routes on it, and
+the webserver's dispatcher answers the HTTP errors: 404 for an unknown
+route, 400 for a malformed request (bad Content-Length, a body that is not
+a JSON object, a metadata filter the DSL rejects), 408 for a body that
+stalls, and 500 for any other handler exception, each with a JSON
+``{"error": ...}`` body.  A route turns its request into a 1-row local
+query frame (``internals.table.local_frame``); a retrieval's filter group
+is read with no Spark job, and the query probes the store's corpus
+snapshot, built once per input version; ``/v1/statistics`` reads the
+snapshot's one-row statistics.  This is an interactive/parity surface,
 not the scale path (batch DataFrame endpoints answer many queries in one
 plan).
 """
@@ -22,12 +24,14 @@ plan).
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import TYPE_CHECKING, Callable
 
 from pathwaydataframework_spark.internals.table import local_frame
-from pathwaydataframework_spark.sources.http_ingress import read_json_object, send_reply
+from pathwaydataframework_spark.sources.http_ingress import (
+    JSON,
+    PathwayWebserver,
+    json_object,
+)
 from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
 
 if TYPE_CHECKING:  # question_answering imports this module via vector_store
@@ -44,21 +48,24 @@ __all__ = [
 
 
 class BaseRestServer:
-    """Route registry + stdlib HTTP runner (reference BaseRestServer:16).
+    """Route registry over one :class:`PathwayWebserver` (reference
+    BaseRestServer:16).
 
     ``serve(route, handler)`` registers ``handler(payload: dict) ->
-    json-able``; ``run(threaded=True)`` starts serving (``port=0`` picks a
-    free port, read back from ``.port``)."""
+    json-able`` as a POST route; ``run(threaded=True)`` starts serving
+    (``port=0`` picks a free port, read back from ``.port``); ``shutdown()``
+    stops it."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0, **kwargs):
         self.host = host
         self.port = port
-        self._routes: dict[str, Callable[[dict], object]] = {}
-        self._server: ThreadingHTTPServer | None = None
-        self._thread: threading.Thread | None = None
+        self._webserver = PathwayWebserver(host, port, with_schema_endpoint=False)
 
     def serve(self, route: str, handler: Callable[[dict], object], **kwargs):
-        self._routes[route] = handler
+        def reply(method: str, query: str, body: bytes):
+            return 200, json.dumps(handler(json_object(body))).encode(), JSON
+
+        self._webserver.register(route, ("POST",), reply)
         return handler
 
     def serve_callable(self, route: str, callable_func: Callable | None = None, **kw):
@@ -75,42 +82,18 @@ class BaseRestServer:
         return register
 
     def run(self, *, threaded: bool = True, **kwargs):
-        routes = self._routes
-
-        class Handler(BaseHTTPRequestHandler):
-            def do_POST(self):  # noqa: N802 — http.server API
-                try:
-                    payload = read_json_object(self)
-                    fn = routes.get(self.path)
-                    if fn is None:
-                        status, body = 404, {"error": "unknown route"}
-                    else:
-                        status, body = 200, fn(payload)
-                    data = json.dumps(body).encode()
-                except Exception as exc:
-                    # ValueError is the client's: a malformed request or filter
-                    status = 400 if isinstance(exc, ValueError) else 500
-                    data = json.dumps({"error": str(exc)}).encode()
-                send_reply(self, status, data)
-
-            def log_message(self, *args):
-                pass
-
-        self._server = ThreadingHTTPServer((self.host, self.port), Handler)
-        self.host, self.port = self._server.server_address[:2]
+        """Serve on ``.host``/``.port``.  Threaded, return the serving
+        thread; otherwise block until :meth:`shutdown`."""
+        ws = self._webserver
+        ws.host, ws.port = self.host, self.port
+        thread = ws.start()
+        self.host, self.port = ws.host, ws.port
         if threaded:
-            self._thread = threading.Thread(
-                target=self._server.serve_forever, daemon=True
-            )
-            self._thread.start()
-            return self._thread
-        self._server.serve_forever()
+            return thread
+        thread.join()
 
     def shutdown(self):
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
+        self._webserver.stop()
 
 
 def _query_frame(spark, payload: dict, *, query_key: str = "query"):
@@ -185,7 +168,8 @@ class QARestServer(DocumentStoreServer):
             self.serve(route, self._answer)
 
     def _answer(self, payload: dict):
-        q = self._spark.createDataFrame(
+        q = local_frame(
+            self._spark,
             [
                 (
                     0,
@@ -208,8 +192,8 @@ class QASummaryRestServer(QARestServer):
         self.serve("/v1/pw_ai_summary", self._summarize)
 
     def _summarize(self, payload: dict):
-        q = self._spark.createDataFrame(
-            [(payload.get("text_list", []),)], "text_list array<string>"
+        q = local_frame(
+            self._spark, [(payload.get("text_list", []),)], "text_list array<string>"
         )
         row = self.rag.summarize_query(q).first()
         return {"response": row["result"] if row else None}

@@ -6,9 +6,10 @@ split → embed → index pipeline and serves ``/v1/retrieve``,
 ``VectorStoreClient`` (:629) is the matching REST client.
 
 Here the pipeline IS a :class:`DocumentStore`, and the server IS a
-:class:`~servers.DocumentStoreServer` over it: the routes, the 1-row local
-query frame per request, the error statuses and the stdlib HTTP runner are
-all ``servers.py``'s single JSON-over-POST core.  Each request probes the
+:class:`~servers.DocumentStoreServer` over it: the routes and the 1-row
+local query frame per request are ``servers.py``'s, and the error statuses
+and the HTTP runner are the package's one HTTP core, a
+``PathwayWebserver``.  Each request probes the
 store's corpus snapshot, which is built once per input version (the
 reference's live index), so a request plans a probe and re-parses nothing.
 The HTTP surface exists for API parity and interactive debugging — the

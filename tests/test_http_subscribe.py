@@ -230,3 +230,74 @@ def test_rest_connector_malformed_requests_answer_400(spark, tmp_path):
         assert os.listdir(spool) == []
     finally:
         srv.stop()
+
+
+def test_http_read_truncated_body_answers_408(spark, tmp_path, monkeypatch):
+    # a body shorter than its Content-Length, on a connection the client
+    # keeps open, must not hold a handler thread: the dispatcher's read
+    # timeout answers 408
+    import socket
+    import urllib.parse
+
+    import pathwaydataframework_spark.sources.http_ingress as hi
+
+    monkeypatch.setattr(hi, "READ_TIMEOUT_S", 0.5)
+    spool = tmp_path / "slow_spool"
+    _, srv = sources.http.read(spark, schema="k string, v long", spool_dir=str(spool))
+    try:
+        port = urllib.parse.urlsplit(srv.url).port
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as sock:
+            sock.sendall(b"POST / HTTP/1.1\r\nHost: x\r\nContent-Length: 100\r\n\r\nab")
+            assert sock.recv(64).startswith(b"HTTP/1.0 408")
+        assert os.listdir(spool) == []
+    finally:
+        srv.stop()
+
+
+def test_http_read_rejects_lines_that_are_not_objects(spark, tmp_path):
+    # Spark's json reader would turn `5` or `[1]` into an all-NULL row
+    spool = tmp_path / "obj_spool"
+    _, srv = sources.http.read(spark, schema="k string, v long", spool_dir=str(spool))
+    try:
+        for body in (b"5", b"[1]", b'{"k": "a", "v": 1}\n[1]'):
+            assert _raw_status(srv.url, body, {}) == 400
+        assert os.listdir(spool) == []
+    finally:
+        srv.stop()
+
+
+def test_stopped_connector_route_answers_404_siblings_keep_serving(spark, tmp_path):
+    from pathwaydataframework_spark.sources.http_ingress import PathwayWebserver
+
+    ws = PathwayWebserver("127.0.0.1", 0)
+    gone_spool = tmp_path / "gone"
+    _, gone = sources.http.rest_connector(
+        spark, schema="x long", spool_dir=str(gone_spool),
+        webserver=ws, route="/gone", response_timeout_s=1.0,
+    )
+    _, kept = sources.http.rest_connector(
+        spark, schema="x long", spool_dir=str(tmp_path / "kept"),
+        webserver=ws, route="/kept", request_validator=lambda payload: "rejected",
+    )
+    try:
+        gone.server.stop()
+        assert _raw_status(ws.url + "/gone", b'{"x": 1}', {}) == 404
+        assert os.listdir(gone_spool) == []
+        assert _raw_status(ws.url + "/kept", b'{"x": 1}', {}) == 400
+    finally:
+        kept.server.stop()
+        ws.stop()
+
+
+def test_one_http_server_and_one_request_handler_in_the_package():
+    import re
+    from pathlib import Path
+
+    import pathwaydataframework_spark
+
+    servers = handlers = 0
+    for path in Path(pathwaydataframework_spark.__file__).parent.rglob("*.py"):
+        src = path.read_text(encoding="utf-8")
+        servers += src.count("ThreadingHTTPServer(")
+        handlers += len(re.findall(r"class \w+\([\w.]*BaseHTTPRequestHandler\)", src))
+    assert (servers, handlers) == (1, 1)
