@@ -27,6 +27,7 @@ from pathwaydataframework_spark.internals.expression import (
     ResolutionContext,
     lift,
 )
+from pathwaydataframework_spark.internals.parquet import read_parquet
 
 ID_COL = "_pw_id"
 
@@ -96,7 +97,9 @@ class Table:
 
     @staticmethod
     def from_parquet(spark: SparkSession, path: str, id_cols: Sequence[str] | None = None) -> "Table":
-        return Table(spark.read.parquet(path), id_cols=id_cols)
+        """The parquet at ``path``, through the package's one loader
+        (``internals.parquet.read_parquet``)."""
+        return Table(read_parquet(spark, path), id_cols=id_cols)
 
     @staticmethod
     def from_dataframe(df: DataFrame, id_cols: Sequence[str] | None = None) -> "Table":

@@ -431,7 +431,7 @@ class debug:
     @staticmethod
     def table_from_parquet(spark: SparkSession, path: str) -> Table:
         """Reference debug/__init__.py:464."""
-        return Table(spark.read.parquet(path))
+        return Table.from_parquet(spark, path)
 
     @staticmethod
     def table_from_rows(spark: SparkSession, rows, schema) -> Table:

@@ -57,6 +57,7 @@ from typing import Callable, Iterable, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from pathwaydataframework_spark.internals.parquet import file_version
 from pathwaydataframework_spark.internals.table import Table, local_frame
 from pathwaydataframework_spark.operators import ranking
 from pathwaydataframework_spark.operators.embedders import HashingEmbedder
@@ -325,13 +326,12 @@ def _python_stage(fn: Callable, src: DataFrame, in_col: str) -> DataFrame:
 
 
 def _input_version(frames: Sequence[DataFrame]) -> tuple:
-    """(path, mtime, size) of every file the doc frames read — their
+    """The ``file_version`` of every file the doc frames read — their
     ``inputFiles()`` — after re-listing their file sources, so a file
     added, removed or rewritten since the last call changes the version.
     Frames with no input files add nothing: they are immutable."""
     files = []
     for frame in frames:
-        spark = frame.sparkSession
         leaves = frame._jdf.queryExecution().analyzed().collectLeaves().iterator()
         while leaves.hasNext():
             leaf = leaves.next()
@@ -340,11 +340,7 @@ def _input_version(frames: Sequence[DataFrame]) -> tuple:
             relation = leaf.relation()
             if relation.getClass().getSimpleName() == "HadoopFsRelation":
                 relation.location().refresh()  # the listing is cached per frame
-        conf = spark._jsc.hadoopConfiguration()
-        for name in frame.inputFiles():
-            path = spark._jvm.org.apache.hadoop.fs.Path(name)
-            status = path.getFileSystem(conf).getFileStatus(path)
-            files.append((name, status.getModificationTime(), status.getLen()))
+        files.extend(file_version(frame.sparkSession, frame.inputFiles()))
     return tuple(sorted(files))
 
 

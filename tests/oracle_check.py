@@ -127,8 +127,9 @@ def run_check(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, li
 if __name__ == "__main__":
     import argparse
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import pathwaydataframework_spark as pw
 
     ap = argparse.ArgumentParser()
