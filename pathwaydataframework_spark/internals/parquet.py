@@ -35,6 +35,9 @@ _SCHEMA_CONFS = (
 
 _lock = threading.Lock()
 _frames: dict[tuple[SparkSession, str], tuple[tuple, DataFrame]] = {}
+# org.apache.hadoop.fs.Path per JVM gateway: py4j resolves a class name
+# with one reflection round trip per package segment
+_path_classes: dict[object, object] = {}
 
 
 def file_version(spark: SparkSession, names: Iterable[str]) -> tuple:
@@ -43,7 +46,10 @@ def file_version(spark: SparkSession, names: Iterable[str]) -> tuple:
     ``FileSystem`` of each name.  A file added, removed or rewritten since
     the last call changes the version; a name that matches nothing adds
     nothing."""
-    path_of = spark._jvm.org.apache.hadoop.fs.Path
+    gateway = spark.sparkContext._gateway
+    path_of = _path_classes.get(gateway)
+    if path_of is None:
+        path_of = _path_classes[gateway] = spark._jvm.org.apache.hadoop.fs.Path
     conf = spark._jsc.hadoopConfiguration()
     files = []
     for name in names:

@@ -43,11 +43,14 @@ def local_frame(spark: SparkSession, rows: Iterable, schema=None) -> DataFrame:
     broadcasts the frame, and a condition-less join of two such frames is
     a CartesianProduct of P×P tasks (P³ for a chain of three).  Here
     ``createDataFrame`` still checks the rows (a bad row raises here, as
-    before); the schema converts them, the JVM unpickles them in one
-    task, and they are collected once into a local relation: later scans
-    cost nothing and joins against it broadcast.
+    before); the schema converts them, and the driver JVM unpickles them
+    and converts them to Catalyst and back to external rows, all rows in
+    one call each, as the rows of one array column (the conversions
+    ``applySchemaToPythonRDD`` runs per partition).  No Spark job starts;
+    later scans cost nothing and joins against it broadcast.
     Scalar rows under an atomic schema keep the classic path."""
-    from pyspark.sql.types import StructType, _parse_datatype_string
+    from pyspark.serializers import CPickleSerializer
+    from pyspark.sql.types import ArrayType, StructField, StructType, _parse_datatype_string
 
     rows = list(rows)
     if isinstance(schema, str):
@@ -56,13 +59,20 @@ def local_frame(spark: SparkSession, rows: Iterable, schema=None) -> DataFrame:
     if schema is not None and not isinstance(schema, (StructType, list, tuple)):
         return df
     struct = df.schema
-    sc = spark.sparkContext
-    pickled = sc.parallelize([struct.toInternal(r) for r in rows], 1)
-    serde = sc._jvm.SerDeUtil
-    objects = serde.toJavaArray(serde.pythonToJava(pickled._jrdd, True))
-    jss = spark._jsparkSession
-    rdd_df = jss.applySchemaToPythonRDD(objects.rdd(), struct.json())
-    return DataFrame(jss.createDataFrame(rdd_df.collectAsList(), rdd_df.schema()), spark)
+    jvm, jss = spark._jvm, spark._jsparkSession
+    jvm.org.apache.spark.api.python.SerDeUtil.initialize()  # pickle constructors
+    pickled = CPickleSerializer().dumps(([struct.toInternal(r) for r in rows],))
+    objects = jvm.net.razorvine.pickle.Unpickler().loads(bytearray(pickled))
+    holder = jss.parseDataType(
+        StructType([StructField("rows", ArrayType(struct, False), False)]).json()
+    )
+    internal = jvm.org.apache.spark.sql.execution.python.EvaluatePython.makeFromJava(
+        holder
+    ).apply(objects)
+    external = jvm.org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(
+        internal, holder
+    )
+    return DataFrame(jss.createDataFrame(external.getList(0), df._jdf.schema()), spark)
 
 
 class TableContext(ResolutionContext):

@@ -82,6 +82,21 @@ def bm25_corpus_stats(docs: DataFrame, dl: Column) -> Column:
     ).scalar()
 
 
+def bm25_idf(n: Column, df: Column) -> Column:
+    """idf = ln(1 + (N - df + 0.5)/(df + 0.5)) of a term found in ``df`` of
+    ``n`` docs."""
+    return F.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+
+def bm25_term_score(
+    idf: Column, tf: Column, dl: Column, avgdl: Column, *, k1: float = 1.2, b: float = 0.75
+) -> Column:
+    """One query term's BM25 score in one doc: idf·tf·(k1+1) / (tf +
+    k1·(1 - b + b·dl/avgdl)).  A doc's score is the sum over the query's
+    distinct terms, rounded to 6 places."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
 def bm25_rank(
     postings: DataFrame,
     qterms: DataFrame,
@@ -96,8 +111,8 @@ def bm25_rank(
     query terms, the ``bm25_query_terms`` and the ``bm25_corpus_stats`` of
     that corpus.
 
-    idf = ln(1 + (N - df + 0.5)/(df + 0.5)); score = Σ_t idf·tf·(k1+1) /
-    (tf + k1·(1 - b + b·dl/avgdl)).  Deterministic tie-break on doc_id.
+    score = Σ_t ``bm25_term_score`` with ``bm25_idf``, rounded to 6 places.
+    Deterministic tie-break on doc_id.
     """
     # df per query term from the restricted postings — identical to the
     # full-index df for those terms, without the full-index groupBy.  The
@@ -110,11 +125,7 @@ def bm25_rank(
         .withColumn("__stats", stats)
         .select(
             "term",
-            F.log(
-                1.0
-                + (F.col("__stats.__n") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            ).alias("idf"),
+            bm25_idf(F.col("__stats.__n"), F.col("df")).alias("idf"),
             F.col("__stats.__avgdl").alias("__avgdl"),
         )
     )
@@ -123,9 +134,9 @@ def bm25_rank(
         .join(F.broadcast(qterms), on="term")
         .withColumn(
             "s",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("__avgdl"))),
+            bm25_term_score(
+                F.col("idf"), F.col("tf"), F.col("dl"), F.col("__avgdl"), k1=k1, b=b
+            ),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("s"), 6).alias("score"))

@@ -17,7 +17,8 @@ Spark-first restatement: every pipeline stage is a lazy DataFrame transform
 - the index is a corpus SNAPSHOT, built once per input version and probed
   by every query endpoint (the reference's index is a live in-RAM service
   the engine updates as documents change).  The snapshot is the chunk
-  table (chunk_id, text, metadata, BM25 length ``dl``, and the embedding
+  table (chunk_id, text, metadata, BM25 length ``dl``, and either the
+  chunk's term → count map ``tf``, the forward index, or the embedding
   for vector retrievers), the BM25 postings (chunk, term, tf, metadata),
   the parsed documents' metadata and the one-row statistics, each
   materialized with ``localCheckpoint`` on the executors.  Its version is
@@ -25,9 +26,16 @@ Spark-first restatement: every pipeline stage is a lazy DataFrame transform
   every request: a changed file rebuilds the snapshot and releases the old
   one; a frame with no input files is immutable and keeps its snapshot.
   The check and the build run under a lock, so concurrent first requests
-  build one snapshot.  A request then only plans a probe: BM25 scores
-  the postings of the query terms (``ranking.bm25_rank``, the scoring step
-  of ``ranking.bm25_scores``), vector retrievers scan the embedded chunks;
+  build one snapshot;
+- retrieval has two paths, chosen by what is asked.  A frame of many
+  queries is one distributed plan: BM25 scores the postings of the query
+  terms (``ranking.bm25_rank``, the scoring step of
+  ``ranking.bm25_scores``), vector retrievers scan the embedded chunks.
+  One BM25 request (a mapping, as the REST route passes) scans the forward
+  index in three Spark jobs: one aggregate for N, avgdl and the idf of
+  each query term, then one top-k scan scoring each chunk with those
+  inlined as literals, with the same formula (``ranking.bm25_idf`` and
+  ``ranking.bm25_term_score``) and tie-break;
 - metadata filtering: the reference evaluates a JMESPath string per row in
   Python (document_store.py:358,410).  Here the SAME filter grammar subset
   (``field == `lit```, ``!=``/``<``/``<=``/``>``/``>=``, ``contains(field,
@@ -43,7 +51,8 @@ driver with no Spark job for a local query frame, in one job otherwise —
 the number of distinct filter strings is bounded by the number of query
 templates, not query rows), and each group probes the snapshot once.  The
 queries broadcast to the postings and chunks, so the corpus is never
-shuffled per query; only the postings of the query terms are.
+shuffled per query; only the postings of the query terms are.  A single
+request shuffles nothing but its one-row aggregate.
 """
 
 from __future__ import annotations
@@ -52,10 +61,10 @@ import re
 import threading
 from dataclasses import dataclass, replace
 from functools import reduce
-from typing import Callable, Iterable, Sequence
+from typing import Callable, Iterable, Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 
 from pathwaydataframework_spark.internals.parquet import file_version
 from pathwaydataframework_spark.internals.table import Table, local_frame
@@ -344,16 +353,25 @@ def _input_version(frames: Sequence[DataFrame]) -> tuple:
     return tuple(sorted(files))
 
 
+def _unpersist(frame: DataFrame) -> None:
+    """Drop a ``localCheckpoint`` frame's blocks from the executors (its
+    plan is one LogicalRDD)."""
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 @dataclass(frozen=True)
 class _Snapshot:
     """The store's corpus at one input version, materialized on the
     executors (never collected to the driver, except the one stats row).
 
     ``chunks``: chunk_id, text, metadata, dl (BM25 length in tokens) and,
-    for vector retrievers, the chunk embedding.  ``postings`` (BM25 only):
-    ``ranking.bm25_postings`` of the chunks — doc_id (the chunk id), term,
-    dl, tf, metadata.  ``docs``: the metadata of each parsed document.
-    ``stats``: one local row — file_count, last_modified, last_indexed."""
+    for BM25, ``tf``, the chunk's term → count map (the forward index one
+    request scans), or, for vector retrievers, the chunk embedding.
+    ``postings`` (BM25 only): ``ranking.bm25_postings`` of the chunks —
+    doc_id (the chunk id), term, dl, tf, metadata (the inverted index a
+    frame of many queries joins).  ``docs``: the metadata of each parsed
+    document.  ``stats``: one local row — file_count, last_modified,
+    last_indexed."""
 
     version: tuple
     chunks: DataFrame
@@ -374,8 +392,8 @@ class _Snapshot:
     def release(self) -> None:
         """Drop the checkpointed blocks from the executors."""
         for frame in (self.chunks, self.postings, self.docs):
-            if frame is not None:  # a localCheckpoint plan is one LogicalRDD
-                frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            if frame is not None:
+                _unpersist(frame)
 
 
 class _SnapshotBM25(BM25Index):
@@ -398,6 +416,56 @@ class _SnapshotBM25(BM25Index):
         tf_q = self._postings.join(F.broadcast(qterms), on="term", how="left_semi")
         stats = ranking.bm25_corpus_stats(self._docs, F.col("dl"))
         return ranking.bm25_rank(tf_q, qterms, stats, k=k)
+
+
+def _bm25_probe(chunks: DataFrame, terms: Sequence[str], k: int) -> list[Row]:
+    """The top-``k`` BM25 hits of one query, (score, chunk_id, text,
+    metadata), from a snapshot's forward index restricted to the eligible
+    ``chunks``, in two Spark actions: one global aggregate gives N, avgdl
+    and each term's df and idf, then one top-k scan scores each chunk with
+    those values inlined as literals (a TakeOrderedAndProject job).  The
+    scores and the tie-break on chunk_id are ``ranking.bm25_rank``'s."""
+    tf = F.col("tf")
+    n = F.count(F.lit(1)).cast("double")
+    row = chunks.agg(
+        F.coalesce(F.avg("dl"), F.lit(1.0)),
+        *(F.struct(F.count(tf[t]).alias("df"), ranking.bm25_idf(n, F.count(tf[t])).alias("idf"))
+          for t in terms),
+    ).first()
+    avgdl, found = row[0], [(t, s["idf"]) for t, s in zip(terms, row[1:]) if s["df"]]
+    if not found:
+        return []
+    score = reduce(Column.__add__, (
+        F.coalesce(ranking.bm25_term_score(
+            F.lit(idf), tf[t], F.col("dl"), F.lit(avgdl)), F.lit(0.0))
+        for t, idf in found
+    ))
+    matched = reduce(Column.__or__, (tf[t].isNotNull() for t, _ in found))
+    return (
+        chunks.filter(matched)
+        .select(F.round(score, 6).alias("score"), "chunk_id", "text", "metadata")
+        .orderBy(F.col("score").desc(), "chunk_id")
+        .limit(k)
+        .collect()
+    )
+
+
+def _nulls_first(values: tuple) -> tuple:
+    """A sort key ordering ``values`` as Spark orders a struct ascending."""
+    return tuple((v is not None, v) for v in values)
+
+
+def _request_frame(spark, request: Mapping) -> DataFrame:
+    """One request (``query``, ``k``, ``metadata_filter``,
+    ``filepath_globpattern``) as a 1-row local query frame, query id 0."""
+    row = (0, request.get("query", ""), int(request.get("k", 3)),
+           request.get("metadata_filter"), request.get("filepath_globpattern"))
+    return local_frame(
+        spark,
+        [row],
+        "query_id long, query string, k int, metadata_filter string, "
+        "filepath_globpattern string",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -577,6 +645,14 @@ class DocumentStore:
             postings = ranking.bm25_postings(
                 chunks, id_col="chunk_id", text_col="text", keep=("metadata",)
             ).localCheckpoint(eager=True)
+            # the forward index: the postings grouped back by chunk (a chunk
+            # with a NULL text has none and keeps a NULL map)
+            tf = postings.groupBy(F.col("doc_id").alias("chunk_id")).agg(
+                F.map_from_entries(F.collect_list(F.struct("term", "tf"))).alias("tf")
+            )
+            indexed = chunks.join(tf, on="chunk_id", how="left").localCheckpoint(eager=True)
+            _unpersist(chunks)
+            chunks = indexed
         docs = self.parsed_docs.select("metadata").localCheckpoint(eager=True)
         # the reference build_pipeline keeps the same running reduce
         # (document_store.py:315)
@@ -604,7 +680,7 @@ class DocumentStore:
     def _retriever(self, snap: _Snapshot):
         """(retriever, indexed frame) over ``snap``'s chunks: BM25 over
         their postings, or the factory's KNN index over their embeddings."""
-        chunks = snap.chunks.drop("dl")
+        chunks = snap.chunks.drop("dl", "tf")
         factory = self.retriever_factory
         if isinstance(factory, TantivyBM25Factory):
             return _SnapshotBM25(snap.chunks, snap.postings), chunks
@@ -718,13 +794,24 @@ class DocumentStore:
         return self._per_group(_df(queries), answer)
 
     def retrieve_query(
-        self, retrieval_queries: DataFrame | Table, *, query_id_col: str = "query_id"
-    ) -> DataFrame:
+        self,
+        retrieval_queries: DataFrame | Table | Mapping,
+        *,
+        query_id_col: str = "query_id",
+    ) -> DataFrame | list[Row]:
         """Top-k chunks per query: (query_id, result) where ``result`` is an
         array of {dist, text, metadata} structs sorted ascending by dist
         (dist = -score, as the reference returns, document_store.py:451).
         Queries carry ``query``, ``k`` and optional ``metadata_filter`` /
-        ``filepath_globpattern`` columns (RetrieveQuerySchema:200)."""
+        ``filepath_globpattern`` columns (RetrieveQuerySchema:200).
+
+        A frame of queries is answered by one distributed plan.  One
+        request, a mapping with the same keys, is answered with its
+        ``result`` list itself: BM25 scans the snapshot's forward index in
+        three Spark jobs (``_bm25_probe``); vector retrievers run the frame
+        path on a 1-row local frame."""
+        if isinstance(retrieval_queries, Mapping):
+            return self._retrieve_one(retrieval_queries)
         queries = _df(retrieval_queries)
         if "k" not in queries.columns:
             queries = queries.withColumn("k", F.lit(3))
@@ -756,6 +843,34 @@ class DocumentStore:
         return base.join(collected, on=query_id_col, how="left").select(
             query_id_col,
             F.coalesce("result", F.array().cast(self._EMPTY_RESULT)).alias("result"),
+        )
+
+    def _retrieve_one(self, request: Mapping) -> list[Row]:
+        """``retrieve_query``'s answer to one request (its docstring)."""
+        merged = merge_filter_strings(
+            request.get("metadata_filter"), request.get("filepath_globpattern")
+        )
+        keep = (  # parsed first: a filter the DSL rejects raises even for k <= 0
+            translate_metadata_filter(merged, F.col("metadata")) if merged else F.lit(True)
+        )
+        if not isinstance(self.retriever_factory, TantivyBM25Factory):
+            spark = self.chunked_docs.sparkSession
+            row = self.retrieve_query(_request_frame(spark, request)).first()
+            return list(row["result"]) if row else []
+        k = int(request.get("k", 3))
+        if k <= 0:
+            return []
+        snap = self._snapshot()
+        # the query's distinct terms, tokenized as the frame path does, over
+        # the one-row local stats frame: the optimizer folds the projection
+        # into a local relation, so no job runs
+        terms = snap.stats.select(
+            F.array_distinct(ranking._tokens(F.lit(request.get("query", ""))))
+        ).first()[0]
+        hits = _bm25_probe(snap.chunks.filter(keep), terms or [], k)
+        return sorted(
+            (Row(dist=-h["score"], text=h["text"], metadata=h["metadata"]) for h in hits),
+            key=_nulls_first,
         )
 
     def statistics_query(self, info_queries: DataFrame | Table) -> DataFrame:

@@ -12,13 +12,14 @@ the webserver's dispatcher answers the HTTP errors: 404 for an unknown
 route, 400 for a malformed request (bad Content-Length, a body that is not
 a JSON object, a metadata filter the DSL rejects), 408 for a body that
 stalls, and 500 for any other handler exception, each with a JSON
-``{"error": ...}`` body.  A route turns its request into a 1-row local
-query frame (``internals.table.local_frame``); a retrieval's filter group
-is read with no Spark job, and the query probes the store's corpus
-snapshot, built once per input version; ``/v1/statistics`` reads the
-snapshot's one-row statistics.  This is an interactive/parity surface,
-not the scale path (batch DataFrame endpoints answer many queries in one
-plan).
+``{"error": ...}`` body.  ``/v1/retrieve`` hands its request to
+``DocumentStore.retrieve_query`` as one request, not as a query frame:
+BM25 scans the store's corpus snapshot, built once per input version, in
+three Spark jobs.  ``/v1/inputs`` and the QA routes turn their request
+into a 1-row local query frame (``internals.table.local_frame``, built
+with no Spark job); ``/v1/statistics`` reads the snapshot's one-row
+statistics.  This is an interactive/parity surface, not the scale path
+(batch DataFrame endpoints answer many queries in one plan).
 """
 
 from __future__ import annotations
@@ -32,7 +33,10 @@ from pathwaydataframework_spark.sources.http_ingress import (
     PathwayWebserver,
     json_object,
 )
-from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
+from pathwaydataframework_spark.xpacks.llm.document_store import (
+    DocumentStore,
+    _request_frame,
+)
 
 if TYPE_CHECKING:  # question_answering imports this module via vector_store
     from pathwaydataframework_spark.xpacks.llm.question_answering import (
@@ -96,23 +100,6 @@ class BaseRestServer:
         self._webserver.stop()
 
 
-def _query_frame(spark, payload: dict, *, query_key: str = "query"):
-    return local_frame(
-        spark,
-        [
-            (
-                0,
-                payload.get(query_key, ""),
-                int(payload.get("k", 3)),
-                payload.get("metadata_filter"),
-                payload.get("filepath_globpattern"),
-            )
-        ],
-        "query_id long, query string, k int, "
-        "metadata_filter string, filepath_globpattern string",
-    )
-
-
 class DocumentStoreServer(BaseRestServer):
     """Reference DocumentStoreServer (:92) — /v1/retrieve, /v1/statistics,
     /v1/inputs over a :class:`DocumentStore`."""
@@ -131,18 +118,17 @@ class DocumentStoreServer(BaseRestServer):
         self.serve("/v1/inputs", self._inputs)
 
     def _retrieve(self, payload: dict):
-        row = self.store.retrieve_query(_query_frame(self._spark, payload)).first()
         return [
             {"dist": h["dist"], "text": h["text"],
              "metadata": json.loads(h["metadata"] or "{}")}
-            for h in (row["result"] if row else [])
+            for h in self.store.retrieve_query(payload)
         ]
 
     def _statistics(self, payload: dict):
         return self.store.stats.first().asDict()
 
     def _inputs(self, payload: dict):
-        row = self.store.inputs_query(_query_frame(self._spark, payload)).first()
+        row = self.store.inputs_query(_request_frame(self._spark, payload)).first()
         return [json.loads(m or "{}") for m in (row["result"] if row else [])]
 
 

@@ -6,16 +6,15 @@ split → embed → index pipeline and serves ``/v1/retrieve``,
 ``VectorStoreClient`` (:629) is the matching REST client.
 
 Here the pipeline IS a :class:`DocumentStore`, and the server IS a
-:class:`~servers.DocumentStoreServer` over it: the routes and the 1-row
-local query frame per request are ``servers.py``'s, and the error statuses
-and the HTTP runner are the package's one HTTP core, a
-``PathwayWebserver``.  Each request probes the
+:class:`~servers.DocumentStoreServer` over it: the routes are
+``servers.py``'s, and the error statuses and the HTTP runner are the
+package's one HTTP core, a ``PathwayWebserver``.  Each request probes the
 store's corpus snapshot, which is built once per input version (the
-reference's live index), so a request plans a probe and re-parses nothing.
-The HTTP surface exists for API parity and interactive debugging — the
-scale path is calling ``DocumentStore.retrieve_query`` with a DataFrame of
-MANY queries, which answers them all in one distributed plan instead of
-one plan per request.
+reference's live index), so a request re-parses nothing: a BM25 retrieval
+scans the snapshot's per-chunk term counts in three Spark jobs.  The HTTP
+surface exists for API parity and interactive debugging — the scale path
+is calling ``DocumentStore.retrieve_query`` with a DataFrame of MANY
+queries, which answers them all in one distributed plan.
 
 No external HTTP libraries: the server is ``http.server`` and the client
 is ``urllib`` — both stdlib, so this works in a hermetic executor image.

@@ -23,8 +23,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, wherever it is
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import pathwaydataframework_spark as pw  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402

@@ -475,3 +475,99 @@ def test_snapshot_answers_equal_per_request_plan(spark, docs_df, vector):
             for r in hits.join(chunks, on="chunk_id").select("score", "text").collect()
         )
         assert got[qid] == want, (qid, got[qid], want)
+
+
+# -- the single-request probe ------------------------------------------------
+
+# (query, k, metadata_filter, filepath_globpattern): no filter, a metadata
+# filter, a glob, k = 1, k larger than the corpus, k = 0, a negative k, a
+# filter matching nothing, no corpus term, an empty query, a repeated term,
+# a tab and upper case, and a score tie cut by k (broken on chunk_id)
+_PROBE_CASES = [
+    ("distributed queries", 2, None, None),
+    ("rows partitions", 3, "owner == `alice`", None),
+    ("rows", 4, None, "**/*.md"),
+    ("distributed", 1, None, None),
+    ("rows spark pandas window", 50, None, None),
+    ("rows", 0, None, None),
+    ("rows", -2, None, None),
+    ("rows", 3, "owner == `nobody`", None),
+    ("flink kafka", 3, None, None),
+    ("", 3, None, None),
+    ("rows rows distributed rows", 3, None, None),
+    ("Rows\tPARTITIONS  spark", 3, None, None),
+    ("rows", 1, None, None),
+]
+
+
+def test_single_request_probe_equals_frame_and_rescored_answers(spark, docs_df):
+    """One request (a mapping) answers the same hits as the distributed
+    frame plan and as ``bm25_scores`` over the filtered chunks."""
+    from pathwaydataframework_spark.operators import ranking
+    from pathwaydataframework_spark.xpacks.llm.document_store import _request_frame
+
+    store = DocumentStore(docs_df)
+    frame = spark.createDataFrame(
+        [(i, q, k, mf, glob) for i, (q, k, mf, glob) in enumerate(_PROBE_CASES)], _QSCHEMA
+    )
+    batch = {r["query_id"]: list(r["result"]) for r in store.retrieve_query(frame).collect()}
+    chunks = store.chunked_docs.select("chunk_id", "text", "metadata")
+    for i, (text, k, mf, glob) in enumerate(_PROBE_CASES):
+        request = {"query": text, "k": k, "metadata_filter": mf, "filepath_globpattern": glob}
+        got = store.retrieve_query(request)
+        assert got == batch[i], (i, got, batch[i])
+        merged = merge_filter_strings(mf, glob)
+        eligible = chunks
+        if merged:
+            eligible = chunks.filter(translate_metadata_filter(merged, F.col("metadata")))
+        q = spark.createDataFrame([(i, text)], "query_id long, query string")
+        hits = ranking.bm25_scores(eligible, q, id_col="chunk_id", k=k)
+        want = sorted(
+            (-r["score"], r["text"])
+            for r in hits.withColumnRenamed("doc_id", "chunk_id")
+            .join(eligible, on="chunk_id").select("score", "text").collect()
+        )
+        assert [(h["dist"], h["text"]) for h in got] == want, (i, got, want)
+    tie = store.retrieve_query({"query": "rows", "k": 2})
+    assert len(tie) == 2 and tie[0]["dist"] == tie[1]["dist"]
+    # a vector store answers one request through its frame path
+    knn = DocumentStore(docs_df, retriever_factory=BruteForceKnnFactory(dim=32), dim=32)
+    request = {"query": "distributed queries", "k": 2, "metadata_filter": "owner == `alice`"}
+    row = knn.retrieve_query(_request_frame(spark, request)).first()
+    assert knn.retrieve_query(request) == list(row["result"]) and len(row["result"]) == 2
+
+
+def test_http_retrieve_runs_at_most_three_jobs(spark, docs_df):
+    """A /v1/retrieve answer (filtered or not) runs at most 3 Spark jobs:
+    the probe's aggregate (2 stage jobs) and its top-k scan."""
+    server = VectorStoreServer(docs_df)
+    server.run_server(port=0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        client = VectorStoreClient(host=server.host, port=server.port)
+        for i, payload in enumerate(
+            [{"query": "distributed rows", "k": 2},
+             {"query": "rows", "k": 3, "metadata_filter": "owner == `alice`"}]
+        ):
+            server._retrieve(payload)  # warm: the snapshot is built once
+            group = f"pds_http_retrieve_{i}"
+            sc.setJobGroup(group, group)
+            try:
+                answer = server._retrieve(payload)
+            finally:
+                sc.setJobGroup(None, None)
+            assert 0 < len(tracker.getJobIdsForGroup(group)) <= 3
+            assert answer and client.query(**payload) == answer
+    finally:
+        server.shutdown()
+
+
+def test_probe_follows_rewritten_parquet_corpus(spark, tmp_path):
+    path = str(tmp_path / "corpus.parquet")
+    _write_corpus(spark, path, ["spark joins tables", "pandas reads csv files"])
+    store = DocumentStore(spark.read.parquet(path))
+    request = {"query": "joins frames", "k": 1}
+    assert [h["text"] for h in store.retrieve_query(request)] == ["spark joins tables"]
+    _write_corpus(spark, path, ["duckdb", "polars frames", "flink streams"])
+    assert [h["text"] for h in store.retrieve_query(request)] == ["polars frames"]

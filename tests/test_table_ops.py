@@ -622,3 +622,31 @@ def test_udf_reducer_multi_arg(spark):
     )
     out = t.groupby(pw.this.g).reduce(pw.this.g, ws=wsum(pw.this.x, pw.this.w))
     assert rows(out) == [("a", 11.0)]
+
+
+def test_local_frame_runs_no_job_and_round_trips_every_type(spark):
+    import datetime
+    import decimal
+
+    from pathwaydataframework_spark.internals.table import local_frame
+
+    schema = (
+        "ts timestamp, ntz timestamp_ntz, d date, dec decimal(12,3), b binary, "
+        "m map<string,int>, n array<struct<x:int,y:array<string>,z:map<string,double>>>, "
+        "s string, f double"
+    )
+    data = [
+        (datetime.datetime(2024, 1, 2, 3, 4, 5, 6), datetime.datetime(2001, 1, 1, 12),
+         datetime.date(2020, 2, 29), decimal.Decimal("-1.250"), b"\x00\xff",
+         {"a": 1, "b": None}, [(1, ["x", None], {"w": 0.5}), None, (None, None, None)],
+         "héllo", float("inf")),
+        (None,) * 9,
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("local_frame_no_job", "local_frame_no_job")
+    try:
+        got = local_frame(spark, data, schema).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("local_frame_no_job") == []
+    assert got == spark.createDataFrame(data, schema).collect()
