@@ -32,10 +32,13 @@ Spark-first restatement: every pipeline stage is a lazy DataFrame transform
   terms (``ranking.bm25_rank``, the scoring step of
   ``ranking.bm25_scores``), vector retrievers scan the embedded chunks.
   One BM25 request (a mapping, as the REST route passes) scans the forward
-  index in three Spark jobs: one aggregate for N, avgdl and the idf of
+  index in three Spark jobs: one aggregate for N, avgdl and the df of
   each query term, then one top-k scan scoring each chunk with those
   inlined as literals, with the same formula (``ranking.bm25_idf`` and
-  ``ranking.bm25_term_score``) and tie-break;
+  ``ranking.bm25_term_score``) and tie-break.  Neither plan grows with
+  the query's length.  Chunk ids are content-addressed, so the snapshot
+  keeps one chunk per id: two documents of equal text and metadata are
+  one chunk on both paths;
 - metadata filtering: the reference evaluates a JMESPath string per row in
   Python (document_store.py:358,410).  Here the SAME filter grammar subset
   (``field == `lit```, ``!=``/``<``/``<=``/``>``/``>=``, ``contains(field,
@@ -52,11 +55,13 @@ the number of distinct filter strings is bounded by the number of query
 templates, not query rows), and each group probes the snapshot once.  The
 queries broadcast to the postings and chunks, so the corpus is never
 shuffled per query; only the postings of the query terms are.  A single
-request shuffles nothing but its one-row aggregate.
+request shuffles nothing but its aggregate's partial counts, at most one
+row per query term and partition.
 """
 
 from __future__ import annotations
 
+import json
 import re
 import threading
 from dataclasses import dataclass, replace
@@ -418,31 +423,45 @@ class _SnapshotBM25(BM25Index):
         return ranking.bm25_rank(tf_q, qterms, stats, k=k)
 
 
-def _bm25_probe(chunks: DataFrame, terms: Sequence[str], k: int) -> list[Row]:
+def _bm25_probe(chunks: DataFrame, query: str, k: int) -> list[Row]:
     """The top-``k`` BM25 hits of one query, (score, chunk_id, text,
     metadata), from a snapshot's forward index restricted to the eligible
-    ``chunks``, in two Spark actions: one global aggregate gives N, avgdl
-    and each term's df and idf, then one top-k scan scores each chunk with
-    those values inlined as literals (a TakeOrderedAndProject job).  The
-    scores and the tie-break on chunk_id are ``ranking.bm25_rank``'s."""
-    tf = F.col("tf")
-    n = F.count(F.lit(1)).cast("double")
-    row = chunks.agg(
-        F.coalesce(F.avg("dl"), F.lit(1.0)),
-        *(F.struct(F.count(tf[t]).alias("df"), ranking.bm25_idf(n, F.count(tf[t])).alias("idf"))
-          for t in terms),
-    ).first()
-    avgdl, found = row[0], [(t, s["idf"]) for t, s in zip(terms, row[1:]) if s["df"]]
-    if not found:
+    ``chunks``, in two Spark actions whose plans do not grow with the
+    query.  The query is one literal, tokenized as the frame path does
+    (``ranking._tokens``).  The first action, one grouped aggregate, counts
+    every chunk under a NULL term (N and avgdl) and every chunk holding a
+    query term under that term (its df).  The second scores each chunk
+    with one aggregate over the found (term, df) pairs, passed as one JSON
+    literal, with N and avgdl inlined: a TakeOrderedAndProject job.  Each
+    chunk costs one map lookup per query term.  The formula is
+    ``ranking.bm25_idf`` and ``ranking.bm25_term_score``, summed and
+    rounded, with ties broken on chunk_id, as in ``ranking.bm25_rank``."""
+    tf, dl = F.col("tf"), F.col("dl")
+    terms = F.array_distinct(ranking._tokens(F.lit(query)))
+    held = F.filter(terms, lambda t: tf[t].isNotNull())
+    groups = (
+        chunks.select(dl, F.explode(F.concat(F.array(F.lit(None).cast("string")), held)).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("n"), F.coalesce(F.avg(dl), F.lit(1.0)).alias("avgdl"))
+        .collect()
+    )
+    dfs = sorted((g["term"], g["n"]) for g in groups if g["term"] is not None)
+    if not dfs:
         return []
-    score = reduce(Column.__add__, (
-        F.coalesce(ranking.bm25_term_score(
-            F.lit(idf), tf[t], F.col("dl"), F.lit(avgdl)), F.lit(0.0))
-        for t, idf in found
-    ))
-    matched = reduce(Column.__or__, (tf[t].isNotNull() for t, _ in found))
+    n, avgdl = next((float(g["n"]), g["avgdl"]) for g in groups if g["term"] is None)
+    found = F.from_json(
+        F.lit(json.dumps([{"term": t, "df": df} for t, df in dfs])),
+        "array<struct<term:string,df:long>>",
+    )
+
+    def add(score: Column, e: Column) -> Column:
+        s = ranking.bm25_term_score(
+            ranking.bm25_idf(F.lit(n), e["df"]), tf[e["term"]], dl, F.lit(avgdl))
+        return score + F.coalesce(s, F.lit(0.0))
+
+    score = F.aggregate(found, F.lit(0.0), add)
     return (
-        chunks.filter(matched)
+        chunks.filter(F.exists(found, lambda e: tf[e["term"]].isNotNull()))
         .select(F.round(score, 6).alias("score"), "chunk_id", "text", "metadata")
         .orderBy(F.col("score").desc(), "chunk_id")
         .limit(k)
@@ -453,19 +472,6 @@ def _bm25_probe(chunks: DataFrame, terms: Sequence[str], k: int) -> list[Row]:
 def _nulls_first(values: tuple) -> tuple:
     """A sort key ordering ``values`` as Spark orders a struct ascending."""
     return tuple((v is not None, v) for v in values)
-
-
-def _request_frame(spark, request: Mapping) -> DataFrame:
-    """One request (``query``, ``k``, ``metadata_filter``,
-    ``filepath_globpattern``) as a 1-row local query frame, query id 0."""
-    row = (0, request.get("query", ""), int(request.get("k", 3)),
-           request.get("metadata_filter"), request.get("filepath_globpattern"))
-    return local_frame(
-        spark,
-        [row],
-        "query_id long, query string, k int, metadata_filter string, "
-        "filepath_globpattern string",
-    )
 
 
 # --------------------------------------------------------------------------
@@ -639,7 +645,12 @@ class DocumentStore:
         bm25 = isinstance(self.retriever_factory, TantivyBM25Factory)
         if not bm25:
             cols.append(self.embedder(text).alias("embedding"))
-        chunks = self.chunked_docs.select(*cols).localCheckpoint(eager=True)
+        # a chunk id is content-addressed, so chunks sharing one (documents
+        # of equal text and metadata) are one chunk: one hit, counted once
+        chunks = (
+            self.chunked_docs.select(*cols).dropDuplicates(["chunk_id"])
+            .localCheckpoint(eager=True)
+        )
         postings = None
         if bm25:
             postings = ranking.bm25_postings(
@@ -806,10 +817,12 @@ class DocumentStore:
         ``filepath_globpattern`` columns (RetrieveQuerySchema:200).
 
         A frame of queries is answered by one distributed plan.  One
-        request, a mapping with the same keys, is answered with its
-        ``result`` list itself: BM25 scans the snapshot's forward index in
-        three Spark jobs (``_bm25_probe``); vector retrievers run the frame
-        path on a 1-row local frame."""
+        request, a mapping with the same keys (the REST route's JSON body),
+        is answered with its ``result`` list itself, read on the driver,
+        since the route needs the hits there: this one endpoint serves both
+        the batch API and ``/v1/retrieve``.  BM25 scans the snapshot's
+        forward index in three Spark jobs (``_bm25_probe``); a vector
+        retriever runs the frame path's group plan for one query."""
         if isinstance(retrieval_queries, Mapping):
             return self._retrieve_one(retrieval_queries)
         queries = _df(retrieval_queries)
@@ -853,21 +866,18 @@ class DocumentStore:
         keep = (  # parsed first: a filter the DSL rejects raises even for k <= 0
             translate_metadata_filter(merged, F.col("metadata")) if merged else F.lit(True)
         )
-        if not isinstance(self.retriever_factory, TantivyBM25Factory):
-            spark = self.chunked_docs.sparkSession
-            row = self.retrieve_query(_request_frame(spark, request)).first()
-            return list(row["result"]) if row else []
         k = int(request.get("k", 3))
         if k <= 0:
             return []
-        snap = self._snapshot()
-        # the query's distinct terms, tokenized as the frame path does, over
-        # the one-row local stats frame: the optimizer folds the projection
-        # into a local relation, so no job runs
-        terms = snap.stats.select(
-            F.array_distinct(ranking._tokens(F.lit(request.get("query", ""))))
-        ).first()[0]
-        hits = _bm25_probe(snap.chunks.filter(keep), terms or [], k)
+        snap = self._snapshot().where(keep)
+        query = request.get("query", "")
+        if isinstance(self.retriever_factory, TantivyBM25Factory):
+            hits = _bm25_probe(snap.chunks, query, k)
+        else:
+            probe = local_frame(
+                self.chunked_docs.sparkSession, [(0, query)], "query_id long, query string"
+            )
+            hits = self._retrieve_group(probe, snap, k, "query_id").collect()
         return sorted(
             (Row(dist=-h["score"], text=h["text"], metadata=h["metadata"]) for h in hits),
             key=_nulls_first,

@@ -33,10 +33,7 @@ from pathwaydataframework_spark.sources.http_ingress import (
     PathwayWebserver,
     json_object,
 )
-from pathwaydataframework_spark.xpacks.llm.document_store import (
-    DocumentStore,
-    _request_frame,
-)
+from pathwaydataframework_spark.xpacks.llm.document_store import DocumentStore
 
 if TYPE_CHECKING:  # question_answering imports this module via vector_store
     from pathwaydataframework_spark.xpacks.llm.question_answering import (
@@ -100,6 +97,19 @@ class BaseRestServer:
         self._webserver.stop()
 
 
+def _query_frame(spark, payload: dict):
+    """One request (``query``, ``k``, ``metadata_filter``,
+    ``filepath_globpattern``) as a 1-row local query frame, query id 0."""
+    row = (0, payload.get("query", ""), int(payload.get("k", 3)),
+           payload.get("metadata_filter"), payload.get("filepath_globpattern"))
+    return local_frame(
+        spark,
+        [row],
+        "query_id long, query string, k int, metadata_filter string, "
+        "filepath_globpattern string",
+    )
+
+
 class DocumentStoreServer(BaseRestServer):
     """Reference DocumentStoreServer (:92) — /v1/retrieve, /v1/statistics,
     /v1/inputs over a :class:`DocumentStore`."""
@@ -128,7 +138,7 @@ class DocumentStoreServer(BaseRestServer):
         return self.store.stats.first().asDict()
 
     def _inputs(self, payload: dict):
-        row = self.store.inputs_query(_request_frame(self._spark, payload)).first()
+        row = self.store.inputs_query(_query_frame(self._spark, payload)).first()
         return [json.loads(m or "{}") for m in (row["result"] if row else [])]
 
 

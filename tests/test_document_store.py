@@ -482,7 +482,8 @@ def test_snapshot_answers_equal_per_request_plan(spark, docs_df, vector):
 # (query, k, metadata_filter, filepath_globpattern): no filter, a metadata
 # filter, a glob, k = 1, k larger than the corpus, k = 0, a negative k, a
 # filter matching nothing, no corpus term, an empty query, a repeated term,
-# a tab and upper case, and a score tie cut by k (broken on chunk_id)
+# a tab and upper case, a score tie cut by k (broken on chunk_id), and 300
+# distinct terms
 _PROBE_CASES = [
     ("distributed queries", 2, None, None),
     ("rows partitions", 3, "owner == `alice`", None),
@@ -497,25 +498,29 @@ _PROBE_CASES = [
     ("rows rows distributed rows", 3, None, None),
     ("Rows\tPARTITIONS  spark", 3, None, None),
     ("rows", 1, None, None),
+    (" ".join(f"w{i}" for i in range(297)) + " shuffle memory rows", 3, None, None),
 ]
 
 
 def test_single_request_probe_equals_frame_and_rescored_answers(spark, docs_df):
     """One request (a mapping) answers the same hits as the distributed
-    frame plan and as ``bm25_scores`` over the filtered chunks."""
+    frame plan and as ``bm25_scores`` over the filtered chunks.  A second
+    copy of a document (equal text and metadata, so equal chunk ids) is
+    one chunk on both paths: every answer equals the store's without it."""
     from pathwaydataframework_spark.operators import ranking
-    from pathwaydataframework_spark.xpacks.llm.document_store import _request_frame
 
-    store = DocumentStore(docs_df)
+    copy = docs_df.filter(F.col("_metadata").contains("joins.md"))
+    store = DocumentStore(docs_df.unionByName(copy))
+    plain = DocumentStore(docs_df)
     frame = spark.createDataFrame(
         [(i, q, k, mf, glob) for i, (q, k, mf, glob) in enumerate(_PROBE_CASES)], _QSCHEMA
     )
     batch = {r["query_id"]: list(r["result"]) for r in store.retrieve_query(frame).collect()}
-    chunks = store.chunked_docs.select("chunk_id", "text", "metadata")
+    chunks = plain.chunked_docs.select("chunk_id", "text", "metadata")
     for i, (text, k, mf, glob) in enumerate(_PROBE_CASES):
         request = {"query": text, "k": k, "metadata_filter": mf, "filepath_globpattern": glob}
         got = store.retrieve_query(request)
-        assert got == batch[i], (i, got, batch[i])
+        assert got == batch[i] == plain.retrieve_query(request), (i, got, batch[i])
         merged = merge_filter_strings(mf, glob)
         eligible = chunks
         if merged:
@@ -530,16 +535,18 @@ def test_single_request_probe_equals_frame_and_rescored_answers(spark, docs_df):
         assert [(h["dist"], h["text"]) for h in got] == want, (i, got, want)
     tie = store.retrieve_query({"query": "rows", "k": 2})
     assert len(tie) == 2 and tie[0]["dist"] == tie[1]["dist"]
-    # a vector store answers one request through its frame path
+    # a vector store answers one request as its frame path does
     knn = DocumentStore(docs_df, retriever_factory=BruteForceKnnFactory(dim=32), dim=32)
     request = {"query": "distributed queries", "k": 2, "metadata_filter": "owner == `alice`"}
-    row = knn.retrieve_query(_request_frame(spark, request)).first()
+    one = spark.createDataFrame([(0, request["query"], 2, request["metadata_filter"], None)], _QSCHEMA)
+    row = knn.retrieve_query(one).first()
     assert knn.retrieve_query(request) == list(row["result"]) and len(row["result"]) == 2
 
 
 def test_http_retrieve_runs_at_most_three_jobs(spark, docs_df):
-    """A /v1/retrieve answer (filtered or not) runs at most 3 Spark jobs:
-    the probe's aggregate (2 stage jobs) and its top-k scan."""
+    """A /v1/retrieve answer (filtered or not, of 2 or 301 terms) runs at
+    most 3 Spark jobs: the probe's aggregate (2 stage jobs) and its top-k
+    scan."""
     server = VectorStoreServer(docs_df)
     server.run_server(port=0)
     sc = spark.sparkContext
@@ -548,7 +555,8 @@ def test_http_retrieve_runs_at_most_three_jobs(spark, docs_df):
         client = VectorStoreClient(host=server.host, port=server.port)
         for i, payload in enumerate(
             [{"query": "distributed rows", "k": 2},
-             {"query": "rows", "k": 3, "metadata_filter": "owner == `alice`"}]
+             {"query": "rows", "k": 3, "metadata_filter": "owner == `alice`"},
+             {"query": " ".join(f"w{i}" for i in range(300)) + " rows", "k": 2}]
         ):
             server._retrieve(payload)  # warm: the snapshot is built once
             group = f"pds_http_retrieve_{i}"
