@@ -8,9 +8,11 @@ inverted-index tables here — no external index service, fully distributed:
 - BM25: two steps.  ``bm25_postings`` builds the term-frequency table (one
   row per doc×term); ``bm25_rank`` scores it: postings ⋈ idf table ⋈ query
   terms → per-(query, doc) score sum → window top-k.  ``bm25_scores``
-  composes them per call; ``DocumentStore`` scores postings it built once
-  per corpus snapshot with the same ``bm25_rank``.  Every stage is a
-  hash-partitioned join/agg keyed on the term or the doc.
+  composes them per call.  ``DocumentStore`` groups the postings by chunk
+  once per corpus snapshot, into each chunk's term → count map, and a
+  frame of queries explodes those maps back into postings for the same
+  ``bm25_rank``.  Every stage is a hash-partitioned join/agg keyed on the
+  term or the doc.
 - fuzzy match: shared-token inverted index join with idf-weighted scores,
   best match per left row via max_by.
 """
@@ -38,22 +40,20 @@ def bm25_postings(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    keep: tuple[str, ...] = (),
     terms: DataFrame | None = None,
 ) -> DataFrame:
-    """BM25 postings: one (doc_id, term, dl, tf, *keep) row per distinct
-    term of each doc, where dl = |d| in tokens and ``keep`` columns ride
-    along per doc.  With ``terms`` (one ``term`` column), only those terms
-    are kept, filtered map-side on the exploded tokens BEFORE the shuffle,
-    so the only corpus-wide exchange carries matching-term occurrences —
-    not the full inverted index.  dl rides through the explode as a
+    """BM25 postings: one (doc_id, term, dl, tf) row per distinct term of
+    each doc, where dl = |d| in tokens.  With ``terms`` (one ``term``
+    column), only those terms are kept, filtered map-side on the exploded
+    tokens BEFORE the shuffle, so the only corpus-wide exchange carries
+    matching-term occurrences — not the full inverted index.  dl rides through the explode as a
     constant per doc, which keeps a doc-lengths join off the score path."""
     occurrences = _ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), *keep, _tokens(F.col(text_col)).alias("__toks")
-    ).select("doc_id", *keep, F.size("__toks").alias("dl"), F.explode("__toks").alias("term"))
+        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("__toks")
+    ).select("doc_id", F.size("__toks").alias("dl"), F.explode("__toks").alias("term"))
     if terms is not None:
         occurrences = occurrences.join(F.broadcast(terms), on="term")
-    return occurrences.groupBy("doc_id", "term", "dl", *keep).agg(
+    return occurrences.groupBy("doc_id", "term", "dl").agg(
         F.count(F.lit(1)).alias("tf")
     )
 

@@ -18,21 +18,22 @@ Spark-first restatement: every pipeline stage is a lazy DataFrame transform
   by every query endpoint (the reference's index is a live in-RAM service
   the engine updates as documents change).  The snapshot is the chunk
   table (chunk_id, text, metadata, BM25 length ``dl``, and either the
-  chunk's term → count map ``tf``, the forward index, or the embedding
-  for vector retrievers), the BM25 postings (chunk, term, tf, metadata),
-  the parsed documents' metadata and the one-row statistics, each
-  materialized with ``localCheckpoint`` on the executors.  Its version is
+  chunk's term → count map ``tf``, the BM25 forward index, or the
+  embedding for vector retrievers), the parsed documents' metadata and
+  the one-row statistics; the two tables are materialized with
+  ``localCheckpoint`` on the executors.  Its version is
   the (path, mtime, size) of every input file of the doc frames, checked on
   every request: a changed file rebuilds the snapshot and releases the old
   one; a frame with no input files is immutable and keeps its snapshot.
   The check and the build run under a lock, so concurrent first requests
   build one snapshot;
-- retrieval has two paths, chosen by what is asked.  A frame of many
-  queries is one distributed plan: BM25 scores the postings of the query
-  terms (``ranking.bm25_rank``, the scoring step of
-  ``ranking.bm25_scores``), vector retrievers scan the embedded chunks.
-  One BM25 request (a mapping, as the REST route passes) scans the forward
-  index in three Spark jobs: one aggregate for N, avgdl and the df of
+- retrieval has two paths, chosen by what is asked, over the one forward
+  index.  A frame of many queries is one distributed plan: BM25 explodes
+  the chunks' ``tf`` maps into postings, keeps those of the query terms
+  and scores them with ``ranking.bm25_rank``, the scoring step of
+  ``ranking.bm25_scores``; vector retrievers scan the embedded chunks.
+  One BM25 request (a mapping, as the REST route passes) scans the ``tf``
+  maps in three Spark jobs: one aggregate for N, avgdl and the df of
   each query term, then one top-k scan scoring each chunk with those
   inlined as literals, with the same formula (``ranking.bm25_idf`` and
   ``ranking.bm25_term_score``) and tie-break.  Neither plan grows with
@@ -53,10 +54,10 @@ Scale notes: queries are grouped by their merged filter string (read on the
 driver with no Spark job for a local query frame, in one job otherwise —
 the number of distinct filter strings is bounded by the number of query
 templates, not query rows), and each group probes the snapshot once.  The
-queries broadcast to the postings and chunks, so the corpus is never
-shuffled per query; only the postings of the query terms are.  A single
-request shuffles nothing but its aggregate's partial counts, at most one
-row per query term and partition.
+query terms broadcast to the chunks' exploded postings, so the corpus is
+never shuffled per query; only the postings of the query terms are.  A
+single request shuffles nothing but its aggregate's partial counts, at most
+one row per query term and partition.
 """
 
 from __future__ import annotations
@@ -370,55 +371,49 @@ class _Snapshot:
     executors (never collected to the driver, except the one stats row).
 
     ``chunks``: chunk_id, text, metadata, dl (BM25 length in tokens) and,
-    for BM25, ``tf``, the chunk's term → count map (the forward index one
-    request scans), or, for vector retrievers, the chunk embedding.
-    ``postings`` (BM25 only): ``ranking.bm25_postings`` of the chunks —
-    doc_id (the chunk id), term, dl, tf, metadata (the inverted index a
-    frame of many queries joins).  ``docs``: the metadata of each parsed
-    document.  ``stats``: one local row — file_count, last_modified,
-    last_indexed."""
+    for BM25, ``tf``, the chunk's term → count map, or, for vector
+    retrievers, the chunk embedding.  ``tf`` is the snapshot's one BM25
+    index: one request scans it, a frame of queries explodes it into
+    postings.  ``docs``: the metadata of each parsed document.  ``stats``:
+    one local row — file_count, last_modified, last_indexed."""
 
     version: tuple
     chunks: DataFrame
-    postings: DataFrame | None
     docs: DataFrame
     stats: DataFrame
 
     def where(self, keep: Column) -> "_Snapshot":
         """The snapshot restricted to the chunks and documents whose
         metadata satisfies ``keep``."""
-        return replace(
-            self,
-            chunks=self.chunks.filter(keep),
-            postings=None if self.postings is None else self.postings.filter(keep),
-            docs=self.docs.filter(keep),
-        )
+        return replace(self, chunks=self.chunks.filter(keep), docs=self.docs.filter(keep))
 
     def release(self) -> None:
         """Drop the checkpointed blocks from the executors."""
-        for frame in (self.chunks, self.postings, self.docs):
-            if frame is not None:
-                _unpersist(frame)
+        _unpersist(self.chunks)
+        _unpersist(self.docs)
 
 
 class _SnapshotBM25(BM25Index):
-    """A BM25Index over a snapshot's chunks that ranks from the snapshot's
-    postings with ``ranking.bm25_rank`` instead of re-tokenizing the chunks
-    per query.  Chunks and postings carry the same metadata filter, so N,
-    avgdl and df are those of the filtered corpus, as in ``bm25_scores``
-    over the filtered chunks."""
+    """A BM25Index over a snapshot's chunks that ranks from their forward
+    index with ``ranking.bm25_rank`` instead of re-tokenizing the chunks
+    per query: the ``tf`` maps of the chunks, already restricted to the
+    group's metadata filter, explode into postings.  N, avgdl and df are
+    therefore those of the filtered corpus, as in ``bm25_scores`` over the
+    filtered chunks."""
 
-    def __init__(self, chunks: DataFrame, postings: DataFrame):
+    def __init__(self, chunks: DataFrame):
         super().__init__(chunks, id_col="chunk_id", text_col="text")
-        self._postings = postings
 
     def query(self, queries: DataFrame, k: int = 10, *, query_id_col: str = "query_id",
               query_text_col: str = "query") -> DataFrame:
         qterms = ranking.bm25_query_terms(
             queries, query_id_col=query_id_col, query_text_col=query_text_col
         )
+        postings = self._docs.select(
+            F.col("chunk_id").alias("doc_id"), "dl", F.explode("tf").alias("term", "tf")
+        )
         # a semi join needs no distinct terms, so no shuffle of the queries
-        tf_q = self._postings.join(F.broadcast(qterms), on="term", how="left_semi")
+        tf_q = postings.join(F.broadcast(qterms), on="term", how="left_semi")
         stats = ranking.bm25_corpus_stats(self._docs, F.col("dl"))
         return ranking.bm25_rank(tf_q, qterms, stats, k=k)
 
@@ -647,23 +642,16 @@ class DocumentStore:
             cols.append(self.embedder(text).alias("embedding"))
         # a chunk id is content-addressed, so chunks sharing one (documents
         # of equal text and metadata) are one chunk: one hit, counted once
-        chunks = (
-            self.chunked_docs.select(*cols).dropDuplicates(["chunk_id"])
-            .localCheckpoint(eager=True)
-        )
-        postings = None
+        chunks = self.chunked_docs.select(*cols).dropDuplicates(["chunk_id"])
         if bm25:
-            postings = ranking.bm25_postings(
-                chunks, id_col="chunk_id", text_col="text", keep=("metadata",)
-            ).localCheckpoint(eager=True)
-            # the forward index: the postings grouped back by chunk (a chunk
-            # with a NULL text has none and keeps a NULL map)
+            # the forward index: the chunks' postings grouped back by chunk
+            # (a chunk with a NULL text has none and keeps a NULL map)
+            postings = ranking.bm25_postings(chunks, id_col="chunk_id", text_col="text")
             tf = postings.groupBy(F.col("doc_id").alias("chunk_id")).agg(
                 F.map_from_entries(F.collect_list(F.struct("term", "tf"))).alias("tf")
             )
-            indexed = chunks.join(tf, on="chunk_id", how="left").localCheckpoint(eager=True)
-            _unpersist(chunks)
-            chunks = indexed
+            chunks = chunks.join(tf, on="chunk_id", how="left")
+        chunks = chunks.localCheckpoint(eager=True)
         docs = self.parsed_docs.select("metadata").localCheckpoint(eager=True)
         # the reference build_pipeline keeps the same running reduce
         # (document_store.py:315)
@@ -678,7 +666,7 @@ class DocumentStore:
             ),
         )
         stats = local_frame(docs.sparkSession, stats.collect(), stats.schema)
-        return _Snapshot(version, chunks, postings, docs, stats)
+        return _Snapshot(version, chunks, docs, stats)
 
     @property
     def stats(self) -> DataFrame:
@@ -690,11 +678,11 @@ class DocumentStore:
 
     def _retriever(self, snap: _Snapshot):
         """(retriever, indexed frame) over ``snap``'s chunks: BM25 over
-        their postings, or the factory's KNN index over their embeddings."""
+        their term counts, or the factory's KNN index over their embeddings."""
         chunks = snap.chunks.drop("dl", "tf")
         factory = self.retriever_factory
         if isinstance(factory, TantivyBM25Factory):
-            return _SnapshotBM25(snap.chunks, snap.postings), chunks
+            return _SnapshotBM25(snap.chunks), chunks
         kwargs = dict(factory.kwargs, id_col="chunk_id", vec_col="embedding")
         return KNNIndex(chunks, **kwargs), chunks
 
@@ -702,7 +690,7 @@ class DocumentStore:
         self, qgrp: DataFrame, snap: _Snapshot, k_max: int, query_id_col: str
     ) -> DataFrame:
         """Top-k_max hits for one filter group: (query_id, score, rank,
-        text, metadata).  BM25 probes the postings with the query text;
+        text, metadata).  BM25 ranks the chunks' term counts by the query text;
         vector retrievers embed it with the store's embedder first."""
         inner, indexed = self._retriever(snap)
         if isinstance(inner, BM25Index):
@@ -866,11 +854,12 @@ class DocumentStore:
         keep = (  # parsed first: a filter the DSL rejects raises even for k <= 0
             translate_metadata_filter(merged, F.col("metadata")) if merged else F.lit(True)
         )
-        k = int(request.get("k", 3))
+        k, query = request.get("k", 3), request.get("query", "")
+        if not isinstance(k, int) or not isinstance(query, str):
+            raise ValueError(f"k must be an integer and query a string, got {k!r}, {query!r}")
         if k <= 0:
             return []
         snap = self._snapshot().where(keep)
-        query = request.get("query", "")
         if isinstance(self.retriever_factory, TantivyBM25Factory):
             hits = _bm25_probe(snap.chunks, query, k)
         else:

@@ -100,6 +100,28 @@ def answer_with_geometric_rag_strategy(
     return t
 
 
+def _with_retrieved_texts(
+    q: DataFrame, indexer: DocumentStore, out_col: str, query: Column, k: int,
+    metadata_filter: Column, *, query_id_col: str = "query_id",
+) -> DataFrame:
+    """``q`` plus ``out_col``: the texts of the top-``k`` chunks ``indexer``
+    retrieves for each row's ``query`` under its ``metadata_filter``, in
+    ``retrieve_query``'s order, or [] when none is found."""
+    retrieval = q.select(
+        F.col(query_id_col),
+        query.alias("query"),
+        F.lit(k).alias("k"),
+        metadata_filter.alias("metadata_filter"),
+        F.lit(None).cast("string").alias("filepath_globpattern"),
+    )
+    hits = indexer.retrieve_query(retrieval, query_id_col=query_id_col).select(
+        F.col(query_id_col), F.transform("result", lambda h: h["text"]).alias(out_col)
+    )
+    return q.join(hits, on=query_id_col, how="left").withColumn(
+        out_col, F.coalesce(out_col, F.array().cast("array<string>"))
+    )
+
+
 def answer_with_geometric_rag_strategy_from_index(
     questions: DataFrame | Table,
     indexer: DocumentStore,
@@ -118,21 +140,9 @@ def answer_with_geometric_rag_strategy_from_index(
     (max_iterations-1)`` docs per question ONCE, then run the geometric
     strategy over prefixes of that single retrieval."""
     max_documents = n_starting_documents * (factor ** (max_iterations - 1))
-    q = _df(questions)
-    retrieval = q.select(
-        F.col(query_id_col),
-        F.col(query_col).alias("query"),
-        F.lit(max_documents).alias("k"),
-        F.lit(metadata_filter).cast("string").alias("metadata_filter"),
-        F.lit(None).cast("string").alias("filepath_globpattern"),
-    )
-    hits = indexer.retrieve_query(retrieval, query_id_col=query_id_col).select(
-        F.col(query_id_col),
-        F.transform("result", lambda h: h["text"]).alias("documents"),
-    )
-    with_docs = q.join(hits, on=query_id_col, how="left").withColumn(
-        "documents",
-        F.coalesce("documents", F.array().cast("array<string>")),
+    with_docs = _with_retrieved_texts(
+        _df(questions), indexer, "documents", F.col(query_col), max_documents,
+        F.lit(metadata_filter).cast("string"), query_id_col=query_id_col,
     )
     return answer_with_geometric_rag_strategy(
         with_docs,
@@ -198,21 +208,9 @@ class BaseRAGQuestionAnswerer(BaseQuestionAnswerer):
         ``docs`` (retrieved texts) and ``result`` (the chat answer)."""
         q = _df(queries)
         cols = q.columns
-        retrieval = q.select(
-            "query_id",
-            F.col("prompt").alias("query"),
-            F.lit(self.search_topk).alias("k"),
-            (
-                F.col("filters") if "filters" in cols else F.lit(None).cast("string")
-            ).alias("metadata_filter"),
-            F.lit(None).cast("string").alias("filepath_globpattern"),
-        )
-        hits = self.indexer.retrieve_query(retrieval).select(
-            "query_id",
-            F.transform("result", lambda h: h["text"]).alias("docs"),
-        )
-        out = q.join(hits, on="query_id", how="left").withColumn(
-            "docs", F.coalesce("docs", F.array().cast("array<string>"))
+        filters = F.col("filters") if "filters" in cols else F.lit(None).cast("string")
+        out = _with_retrieved_texts(
+            q, self.indexer, "docs", F.col("prompt"), self.search_topk, filters
         )
         response_type = (
             F.col("response_type") if "response_type" in cols else F.lit("short")

@@ -97,19 +97,6 @@ class BaseRestServer:
         self._webserver.stop()
 
 
-def _query_frame(spark, payload: dict):
-    """One request (``query``, ``k``, ``metadata_filter``,
-    ``filepath_globpattern``) as a 1-row local query frame, query id 0."""
-    row = (0, payload.get("query", ""), int(payload.get("k", 3)),
-           payload.get("metadata_filter"), payload.get("filepath_globpattern"))
-    return local_frame(
-        spark,
-        [row],
-        "query_id long, query string, k int, metadata_filter string, "
-        "filepath_globpattern string",
-    )
-
-
 class DocumentStoreServer(BaseRestServer):
     """Reference DocumentStoreServer (:92) — /v1/retrieve, /v1/statistics,
     /v1/inputs over a :class:`DocumentStore`."""
@@ -138,7 +125,12 @@ class DocumentStoreServer(BaseRestServer):
         return self.store.stats.first().asDict()
 
     def _inputs(self, payload: dict):
-        row = self.store.inputs_query(_query_frame(self._spark, payload)).first()
+        q = local_frame(
+            self._spark,
+            [(0, payload.get("metadata_filter"), payload.get("filepath_globpattern"))],
+            "query_id long, metadata_filter string, filepath_globpattern string",
+        )
+        row = self.store.inputs_query(q).first()
         return [json.loads(m or "{}") for m in (row["result"] if row else [])]
 
 

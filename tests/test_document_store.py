@@ -273,6 +273,12 @@ def test_vector_store_server_malformed_requests_answer_400(docs_df):
         bad_filter = json.dumps({"query": "rows", "metadata_filter": "path =="})
         status, body = _raw_post(server, "/v1/retrieve", bad_filter.encode(), {})
         assert status == 400 and "metadata filter" in body["error"]
+        for bad in ({"query": "rows", "k": None}, {"query": ["a"], "k": 2}):
+            status, body = _raw_post(server, "/v1/retrieve", json.dumps(bad).encode(), {})
+            assert status == 400 and "k must be an integer" in body["error"], (bad, body)
+        # /v1/inputs reads no k
+        status, body = _raw_post(server, "/v1/inputs", b'{"k": null}', {})
+        assert status == 200 and len(body) == 4
         # the server still answers well-formed requests afterwards
         status, body = _raw_post(server, "/v1/statistics", b"{}", {})
         assert status == 200 and body["file_count"] == 4
@@ -306,7 +312,8 @@ def test_client_requires_exactly_one_address():
 
 def test_retrieve_plan_no_cartesian(spark, docs_df):
     """Scale check: store retrieval is the banded/broadcast BM25 plan —
-    no CartesianProduct anywhere, queries broadcast to the postings."""
+    no CartesianProduct anywhere, query terms broadcast to the postings
+    exploded from the chunks' term counts."""
     from pathwaydataframework_spark.plans import formatted_plan
 
     store = DocumentStore(docs_df)
@@ -360,6 +367,20 @@ def test_snapshot_follows_rewritten_parquet_input(spark, tmp_path, docs_df):
     # a frame with no input files is immutable: it keeps its snapshot
     frozen = DocumentStore(docs_df)
     assert frozen._snapshot() is frozen._snapshot()
+
+
+def test_bm25_snapshot_persists_chunks_and_docs_only(spark, docs_df):
+    """A BM25 snapshot checkpoints two frames: the chunks with their term
+    counts ``tf``, the one BM25 index both retrieval paths read, and the
+    documents' metadata."""
+    store = DocumentStore(docs_df)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    snap = store._snapshot()
+    added = set(persisted().keys()) - before
+    rdds = {f._jdf.queryExecution().analyzed().rdd().id() for f in (snap.chunks, snap.docs)}
+    assert added == rdds
+    assert "tf" in snap.chunks.columns
 
 
 def test_concurrent_first_requests_build_one_snapshot(spark, docs_df, monkeypatch):
