@@ -464,8 +464,10 @@ def q_asof_now(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_session_predicate(spark: SparkSession, sf: str) -> DataFrame:
     """session(predicate=...) — merge consecutive events while the Python
-    predicate holds (SURVEY §2.5, reference _window.py:595); the batch plan
-    is one applyInPandas pass per instance."""
+    predicate holds (SURVEY §2.5, reference _window.py:595) — through the
+    (col, kind) dict API, which runs windowby's session plan: lag(ts) per
+    instance, the predicate as a pandas UDF over (prev, cur) times, a
+    running-sum session id and a native aggregate."""
     from pathwaydataframework_spark.operators import stateful
 
     ev = load_table(spark, sf, "events")

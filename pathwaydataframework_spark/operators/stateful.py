@@ -7,10 +7,13 @@ Reference analogues (SURVEY.md §2.5/2.9):
 - ``Table.deduplicate(acceptor=...)`` — keep the previous value unless the
   acceptor accepts the new one (stdlib/stateful/deduplicate.py:9)
 
-Both need sequential per-key scans, so they lower to ``applyInPandas``:
+Predicate sessions are ``windowby(time, window=session(predicate=...),
+instance=...).reduce(...)``: the predicate runs as a pandas UDF over the
+(prev, cur) event times only and the aggregates are native.  Acceptor
+dedup needs a sequential per-key scan, so it lowers to ``applyInPandas``:
 one shuffle on the instance key, then an Arrow-batched linear scan per
-group.  This is the batch path; the streaming path
-(applyInPandasWithState) lands with the streaming round.
+group.  Both are batch paths; their streaming forms are in
+``streaming/stateful.py`` (``applyInPandasWithState``).
 """
 
 from __future__ import annotations
@@ -19,8 +22,10 @@ from typing import Callable
 
 import pyspark.sql.functions as F
 
-from pathwaydataframework_spark.internals.expression import ColumnRef
+from pathwaydataframework_spark.internals import reducers as R
+from pathwaydataframework_spark.internals.expression import THIS, ColumnRef
 from pathwaydataframework_spark.internals.table import Table
+from pathwaydataframework_spark.operators.temporal import session, windowby
 
 
 def session_windows_by_predicate(
@@ -37,50 +42,15 @@ def session_windows_by_predicate(
     ``aggregations`` maps output name → (column, one of 'count'/'sum'/
     'min'/'max').  Output: instance, _pw_window_start, _pw_window_end + aggs.
     """
-    tname = time_col.name if isinstance(time_col, ColumnRef) else time_col
-    iname = instance.name if isinstance(instance, ColumnRef) else instance
-    agg_items = list(aggregations.items())
+    def ref(c):
+        return c if isinstance(c, ColumnRef) else ColumnRef(THIS, c)
 
-    fields = []
-    for out_name, (col, kind) in agg_items:
-        dtype = "long" if kind == "count" else dict(table.df.dtypes)[col]
-        fields.append(f"{out_name} {dtype}")
-    schema = (
-        f"{iname} {dict(table.df.dtypes)[iname]}, "
-        f"_pw_window_start {dict(table.df.dtypes)[tname]}, "
-        f"_pw_window_end {dict(table.df.dtypes)[tname]}, " + ", ".join(fields)
-    )
-
-    def _apply(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(tname, kind="mergesort").reset_index(drop=True)
-        out_rows = []
-        start = 0
-        times = pdf[tname].tolist()
-        for i in range(1, len(pdf) + 1):
-            is_break = i == len(pdf) or not predicate(times[i - 1], times[i])
-            if is_break:
-                seg = pdf.iloc[start:i]
-                row = {
-                    iname: seg[iname].iloc[0],
-                    "_pw_window_start": seg[tname].iloc[0],
-                    "_pw_window_end": seg[tname].iloc[-1],
-                }
-                for out_name, (col, kind) in agg_items:
-                    s = seg[col]
-                    row[out_name] = {
-                        "count": len(seg),
-                        "sum": s.sum(),
-                        "min": s.min(),
-                        "max": s.max(),
-                    }[kind]
-                out_rows.append(row)
-                start = i
-        return pd.DataFrame(out_rows)
-
-    out = table.df.groupBy(iname).applyInPandas(_apply, schema)
-    return Table(out)
+    kinds = {"count": lambda _: R.count(), "sum": R.sum, "min": R.min, "max": R.max}
+    inst = ref(instance)
+    out = windowby(
+        table, ref(time_col), window=session(predicate=predicate), instance=inst
+    ).reduce(**{name: kinds[kind](ref(col)) for name, (col, kind) in aggregations.items()})
+    return Table(out.df.select(inst.name, "_pw_window_start", "_pw_window_end", *aggregations))
 
 
 def deduplicate_with_acceptor(

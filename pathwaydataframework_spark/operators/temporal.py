@@ -13,8 +13,13 @@ Physical strategies (designed for 100 TB, tested at sf0.1):
 * tumbling/sliding → ``F.window``: the expansion happens JVM-side (Expand
   operator), aggregation is a plain hash-agg keyed on (window, instance) — one
   shuffle, fully parallel.
-* session(max_gap) → ``F.session_window``: Spark's native session aggregation
-  (one shuffle on instance, sessionization within partitions).
+* session(max_gap) over timestamps → ``F.session_window``: Spark's native
+  session aggregation (one shuffle on instance, sessionization within
+  partitions).  Numeric max_gap and predicate sessions → ``lag(t)`` per
+  instance, a break flag (a native gap comparison, or the predicate as a
+  pandas UDF over the (prev, cur) times), a running-sum session id and a
+  hash aggregate; ``operators.stateful.session_windows_by_predicate`` is
+  this same path.
 * interval_join → the same double-bucketing trick the reference uses
   (equi-join on ``floor(t/width)`` buckets, candidates from 2 adjacent
   buckets, then band filter).  This turns an O(n·m) range join into an
@@ -30,7 +35,6 @@ Physical strategies (designed for 100 TB, tested at sf0.1):
 from __future__ import annotations
 
 import datetime as _dt
-import itertools
 import re
 from dataclasses import dataclass
 from typing import Any
@@ -47,10 +51,8 @@ from pathwaydataframework_spark.internals.expression import (
     ResolutionContext,
     lift,
 )
-from pathwaydataframework_spark.internals.groupbys import GroupedTable
+from pathwaydataframework_spark.internals.groupbys import GroupedContext
 from pathwaydataframework_spark.internals.table import Table
-
-_alias_counter = itertools.count()
 
 
 def duration_to_seconds(duration) -> float:
@@ -84,6 +86,16 @@ def _duration_str(duration) -> str:
         return f"{int(secs)} seconds"
     return f"{int(secs * 1_000_000)} microseconds"
 
+
+def _time_dtype(df, col: Column) -> str:
+    return dict(df.select(col.alias("__t")).dtypes)["__t"]
+
+
+def _is_numeric(dtype: str) -> bool:
+    """Numeric event time: the reference accepts int/float times."""
+    return dtype in ("bigint", "int", "smallint", "tinyint", "double", "float") or (
+        dtype.startswith("decimal")
+    )
 
 
 def _epoch_seconds(col: Column) -> Column:
@@ -202,10 +214,8 @@ class WindowedTable:
         # the reference accepts int/float event time everywhere
         # (tests/temporal/test_windows.py test_tumbling/test_*_floats);
         # F.window needs timestamps, so numeric time takes an arithmetic path
-        tdtype = dict(t._df.select(tcol.alias("__t")).dtypes)["__t"]
-        numeric_time = tdtype in (
-            "bigint", "int", "smallint", "tinyint", "double", "float",
-        ) or tdtype.startswith("decimal")
+        tdtype = _time_dtype(t._df, tcol)
+        numeric_time = _is_numeric(tdtype)
         bt = t
         if self._behavior is not None and t._df.isStreaming and not numeric_time:
             bt, tcol = self._apply_stream_behavior(t, tcol)
@@ -228,17 +238,13 @@ class WindowedTable:
             if win.predicate is not None:
                 # reference _window.py:595 accepts predicate sessions through
                 # the ordinary windowby(...).reduce(...) call shape
-                return self._predicate_session_reduce(win, aggs)
+                return self._session_reduce(_predicate_breaks(win.predicate), aggs)
             if numeric_time:
                 # numeric max_gap session: the reference's STRICT merge
-                # (next - cur < max_gap, _window.py:80) as a predicate
-                gap = (
-                    duration_to_seconds(win.max_gap)
-                    if not isinstance(win.max_gap, (int, float))
-                    else float(win.max_gap)
-                )
-                strict = SessionWindow(None, lambda a, b: (b - a) < gap)
-                return self._predicate_session_reduce(strict, aggs)
+                # (next - cur < max_gap, _window.py:80), so a gap of
+                # max_gap or more breaks — a native comparison
+                gap = F.lit(duration_to_seconds(win.max_gap))
+                return self._session_reduce(lambda prev, cur: (cur - prev) >= gap, aggs)
             # reference merge is STRICT: next - cur < max_gap splits exactly-
             # gap-apart events (_window.py:80); Spark's session_window merges
             # on <= (closed interval).  Shrinking the gap by 1 µs (timestamp
@@ -257,28 +263,10 @@ class WindowedTable:
         ≤ ceil(dur/hop) candidate starts), grouped by the start value.
         Integer time with integral duration/origin keeps integer window
         bounds, matching the reference's int-time tables."""
-        from pathwaydataframework_spark.internals.groupbys import GroupedContext
-
         t = self._table
         origin = float(win.origin or 0)
-        if isinstance(win, TumblingWindow):
-            dur = (
-                duration_to_seconds(win.duration)
-                if not isinstance(win.duration, (int, float))
-                else float(win.duration)
-            )
-            hop = dur
-        else:
-            dur = (
-                duration_to_seconds(win.duration)
-                if not isinstance(win.duration, (int, float))
-                else float(win.duration)
-            )
-            hop = (
-                duration_to_seconds(win.hop)
-                if not isinstance(win.hop, (int, float))
-                else float(win.hop)
-            )
+        dur = duration_to_seconds(win.duration)
+        hop = dur if isinstance(win, TumblingWindow) else duration_to_seconds(win.hop)
         integral = (
             tdtype in ("bigint", "int", "smallint", "tinyint")
             and dur.is_integer()
@@ -334,128 +322,54 @@ class WindowedTable:
             return ok
 
         df = t._df.withColumn("__pw_k", F.explode(F.filter(cands, _fits)))
-        start = _start_of(F.col("__pw_k"))
-        end = _end_of(F.col("__pw_k"))
-        out_keys: list[str] = []
-        part_cols: list[str] = []
-        inst_name = None
-        if self._instance is not None:
-            inst_name = (
-                self._instance.name
-                if isinstance(self._instance, ColumnRef)
-                else "_pw_instance"
-            )
-            if inst_name not in df.columns:
-                df = df.withColumn(inst_name, t._resolve(self._instance))
-            part_cols.append(inst_name)
-            out_keys.append(inst_name)
-        ctx = GroupedContext(Table(df))
-        agg_cols = [lift(e)._resolve(ctx).alias(name) for name, e in aggs.items()]
-        out = df.groupBy(start.alias("_pw_window_start"), *part_cols).agg(
-            (F.min(end)).alias("_pw_window_end"), *agg_cols
+        df, inst_keys = self._with_instance(df, t)
+        out = df.groupBy(_start_of(F.col("__pw_k")).alias("_pw_window_start"), *inst_keys).agg(
+            F.min(_end_of(F.col("__pw_k"))).alias("_pw_window_end"), *_reduce_cols(df, aggs)
         )
-        extra_keys = []
-        if inst_name is not None and inst_name != "_pw_instance":
-            extra_keys.append(F.col(inst_name).alias("_pw_instance"))
-        return Table(
-            out.select(
-                "_pw_window_start", "_pw_window_end", *out_keys, *extra_keys,
-                *list(aggs.keys()),
-            )
-        )
+        return _window_output(out, ["_pw_window_start", "_pw_window_end"], inst_keys, aggs)
 
-    def _predicate_session_reduce(self, win: SessionWindow, aggs) -> Table:
-        """session(predicate=...) through the normal reduce path.
+    def _session_reduce(self, breaks, aggs) -> Table:
+        """Sessions over a break condition: ``breaks(prev_t, t)`` is a
+        Column that is true where ``t`` starts a new session after the
+        previous event time ``prev_t`` of its instance.
 
-        Reference _window.py:595 (SessionWindow._merge via predicate).
-        Physical plan: one shuffle on instance, lag(t) within partition, the
-        predicate as an Arrow-batched pandas UDF over (prev, cur) pairs only
-        (never the payload), a running-sum session id, then a NATIVE hash
-        aggregate — so every reducer (avg, sorted_tuple, ...) composes,
-        unlike the (col, kind) dict of
-        operators.stateful.session_windows_by_predicate.
+        Reference _window.py:595 (SessionWindow._merge).  Physical plan: one
+        shuffle on instance, lag(t) within partition, the break condition
+        over (prev, cur) pairs only (never the payload), a running-sum
+        session id, then a NATIVE hash aggregate — so every reducer (avg,
+        sorted_tuple, ...) composes.
         """
-        import pandas as pd
-        from pyspark.sql import Window as W
-        from pyspark.sql.functions import pandas_udf
-
-        from pathwaydataframework_spark.internals.groupbys import GroupedContext
-        from pathwaydataframework_spark.internals.table import Table as _Table
-
         t = self._table
-        predicate = win.predicate
-        tcol = t._resolve(self._time)
-        df = t._df.withColumn("__pw_t", tcol)
-
-        out_keys: list[str] = []
-        if self._instance is not None:
-            inst_name = (
-                self._instance.name
-                if isinstance(self._instance, ColumnRef)
-                else "_pw_instance"
-            )
-            df = df.withColumn(inst_name, t._resolve(self._instance)) if (
-                inst_name not in df.columns
-            ) else df
-            part_cols = [inst_name]
-            out_keys.append(inst_name)
-        else:
-            part_cols = []
-
-        w = (
-            W.partitionBy(*part_cols).orderBy("__pw_t")
-            if part_cols
-            else W.partitionBy(F.lit(0)).orderBy("__pw_t")
-        )
+        df = t._df.withColumn("__pw_t", t._resolve(self._time))
+        df, inst_keys = self._with_instance(df, t)
+        w = W.partitionBy(*(inst_keys or [F.lit(0)])).orderBy("__pw_t")
         df = df.withColumn("__pw_prev_t", F.lag("__pw_t").over(w))
-
-        def _merges_fn(prev, cur):
-            return pd.Series(
-                [
-                    (p is not None and not pd.isna(p)) and bool(predicate(p, c))
-                    for p, c in zip(prev, cur)
-                ]
-            )
-
-        # real annotation objects (the module's `from __future__ import
-        # annotations` would stringify inline hints, which pandas_udf's
-        # signature inference cannot evaluate here)
-        _merges_fn.__annotations__ = {
-            "prev": pd.Series, "cur": pd.Series, "return": pd.Series
-        }
-        _merges = pandas_udf(_merges_fn, "boolean")
-
+        prev_t, cur_t = F.col("__pw_prev_t"), F.col("__pw_t")
         df = df.withColumn(
             "__pw_break",
-            F.when(
-                F.col("__pw_prev_t").isNull()
-                | ~_merges("__pw_prev_t", "__pw_t"),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
+            F.when(prev_t.isNull() | breaks(prev_t, cur_t), F.lit(1)).otherwise(F.lit(0)),
         )
         df = df.withColumn(
             "__pw_session",
-            F.sum("__pw_break").over(
-                w.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
+            F.sum("__pw_break").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
         )
-
-        ctx = GroupedContext(_Table(df))
-        agg_cols = [lift(e)._resolve(ctx).alias(name) for name, e in aggs.items()]
-        out = df.groupBy(*part_cols, "__pw_session").agg(
+        out = df.groupBy(*inst_keys, "__pw_session").agg(
             F.min("__pw_t").alias("_pw_window_start"),
             F.max("__pw_t").alias("_pw_window_end"),
-            *agg_cols,
+            *_reduce_cols(df, aggs),
         )
-        extra_keys = []
-        if out_keys and out_keys[0] != "_pw_instance":
-            extra_keys.append(F.col(out_keys[0]).alias("_pw_instance"))
-        return _Table(
-            out.select(
-                "_pw_window_start", "_pw_window_end", *out_keys, *extra_keys,
-                *list(aggs.keys()),
-            )
-        )
+        return _window_output(out, ["_pw_window_start", "_pw_window_end"], inst_keys, aggs)
+
+    def _with_instance(self, df, t: Table):
+        """``df`` with windowby's instance as a named column, and the
+        instance key names: a column instance keeps its name, any other
+        instance is ``_pw_instance``; no instance gives no key."""
+        if self._instance is None:
+            return df, []
+        name = self._instance.name if isinstance(self._instance, ColumnRef) else "_pw_instance"
+        if name == "_pw_instance" or name not in df.columns:
+            df = df.withColumn(name, t._resolve(self._instance))
+        return df, [name]
 
     def _apply_stream_behavior(self, t: Table, tcol: Column):
         """Lower the attached reference behavior onto a STREAMING plan
@@ -501,42 +415,22 @@ class WindowedTable:
         table: Table | None = None,
     ) -> Table:
         t = table if table is not None else self._table
-        from pathwaydataframework_spark.internals.groupbys import GroupedContext
-
-        ctx = GroupedContext(t)
-        group_cols = [wcol.alias("_pw_window")]
-        out_keys = []
-        inst_name = None
-        if self._instance is not None:
-            inst_name = (
-                self._instance.name if isinstance(self._instance, ColumnRef) else "_pw_instance"
-            )
-            group_cols.append(t._resolve(self._instance).alias(inst_name))
-            out_keys.append(inst_name)
-        agg_cols = [lift(e)._resolve(ctx).alias(name) for name, e in aggs.items()]
+        df, inst_keys = self._with_instance(t._df, t)
+        agg_cols = _reduce_cols(df, aggs)
         if session:
             # reference reports _pw_window_end = max(key), the LAST EVENT
             # TIME in the session (_window.py:129 reducers.max(key)), not
             # last event + gap; Spark's session_window.end is the latter, so
             # track max(t) as an extra agg.
             agg_cols.append(F.max(tcol).alias("_pw_session_last"))
-        out = t._df.groupBy(*group_cols).agg(*agg_cols)
-        end_col = (
-            F.col("_pw_session_last") if session else F.col("_pw_window.end")
+        out = df.groupBy(wcol.alias("_pw_window"), *inst_keys).agg(*agg_cols)
+        end_col = F.col("_pw_session_last") if session else F.col("_pw_window.end")
+        return _window_output(
+            out,
+            [F.col("_pw_window.start").alias("_pw_window_start"), end_col.alias("_pw_window_end")],
+            inst_keys,
+            aggs,
         )
-        extra_keys = []
-        if inst_name is not None and inst_name != "_pw_instance":
-            # also expose the reference's canonical key name alongside the
-            # original column (ports select pw.this._pw_instance)
-            extra_keys.append(F.col(inst_name).alias("_pw_instance"))
-        out = out.select(
-            F.col("_pw_window.start").alias("_pw_window_start"),
-            end_col.alias("_pw_window_end"),
-            *out_keys,
-            *extra_keys,
-            *list(aggs.keys()),
-        )
-        return Table(out)
 
     def _intervals_over_reduce(self, win: IntervalsOverWindow, aggs) -> Table:
         """One window per probe time p over [p+lb, p+ub] — implemented as a
@@ -556,7 +450,8 @@ class WindowedTable:
 
         t = self._table
         tcol = _epoch_seconds(t._resolve(self._time))
-        data = t._df.withColumn("__pw_t", tcol)
+        data, inst_keys = self._with_instance(t._df, t)
+        data = data.withColumn("__pw_t", tcol)
         # same degenerate-band hazard as interval_join: floor the bucket
         # width at 1 second (any width >= the span is correct)
         width = max(ub - lb, 1.0)
@@ -575,29 +470,50 @@ class WindowedTable:
             (F.col("__pw_t") >= F.col("__pw_p") + F.lit(lb))
             & (F.col("__pw_t") <= F.col("__pw_p") + F.lit(ub))
         )
-        from pathwaydataframework_spark.internals.groupbys import GroupedContext
-
-        # honor windowby(instance=...): aggregate per (probe window,
-        # instance) — silently mixing instances was a review finding
-        group_keys = ["_pw_window"]
-        if self._instance is not None:
-            inst_name = (
-                self._instance.name
-                if isinstance(self._instance, ColumnRef)
-                else str(self._instance)
-            )
-            group_keys.append(inst_name)
-        jt = Table(joined)
-        ctx = GroupedContext(jt)
-        agg_cols = [lift(e)._resolve(ctx).alias(name) for name, e in aggs.items()]
-        out = joined.groupBy(*group_keys).agg(*agg_cols)
+        out = joined.groupBy("_pw_window", *inst_keys).agg(*_reduce_cols(joined, aggs))
         if win.is_outer:
             pad_keys = probes.select("_pw_window").distinct()
-            if len(group_keys) > 1:
-                insts = joined.select(*group_keys[1:]).distinct()
-                pad_keys = pad_keys.crossJoin(insts)
-            out = pad_keys.join(out, on=group_keys, how="left")
-        return Table(out)
+            if inst_keys:
+                pad_keys = pad_keys.crossJoin(joined.select(*inst_keys).distinct())
+            out = pad_keys.join(out, on=["_pw_window", *inst_keys], how="left")
+        return _window_output(out, ["_pw_window"], inst_keys, aggs)
+
+
+def _reduce_cols(df, aggs) -> list[Column]:
+    """windowby's reducers resolved over ``df``, named by their outputs."""
+    ctx = GroupedContext(Table(df))
+    return [lift(e)._resolve(ctx).alias(name) for name, e in aggs.items()]
+
+
+def _window_output(out, window_keys: list, inst_keys: list[str], aggs) -> Table:
+    """A windowby result's columns: the window keys, the instance, and the
+    reducers.  A named instance column is also exposed as ``_pw_instance``,
+    the reference's key name (ports select pw.this._pw_instance)."""
+    aliases = [F.col(k).alias("_pw_instance") for k in inst_keys if k != "_pw_instance"]
+    return Table(out.select(*window_keys, *inst_keys, *aliases, *aggs))
+
+
+def _predicate_breaks(predicate):
+    """The session break condition for a user predicate: the predicate runs
+    as an Arrow-batched pandas UDF over (prev, cur) event-time pairs, and
+    an event breaks its session where ``predicate(prev, cur)`` is false."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _merges_fn(prev, cur):
+        return pd.Series(
+            [
+                (p is not None and not pd.isna(p)) and bool(predicate(p, c))
+                for p, c in zip(prev, cur)
+            ]
+        )
+
+    # real annotation objects (the module's `from __future__ import
+    # annotations` would stringify inline hints, which pandas_udf's
+    # signature inference cannot evaluate here)
+    _merges_fn.__annotations__ = {"prev": pd.Series, "cur": pd.Series, "return": pd.Series}
+    merges = pandas_udf(_merges_fn, "boolean")
+    return lambda prev, cur: ~merges(prev, cur)
 
 
 # The reference's default window origin for datetimes is 1973-01-01 — a
@@ -685,20 +601,11 @@ def _pack_sides(ldf, rdf):
     return l_struct, r_struct
 
 
-_NUMERIC_DTYPES = ("bigint", "int", "smallint", "tinyint", "double", "float")
-
-
 def _asof_time_type(ldf, lt: Column, rdf, rt: Column) -> str:
-    """Unified ordering type for the asof union: numeric event time (the
-    reference accepts int/float times) orders as double; otherwise
-    timestamp_ntz."""
-    lty = dict(ldf.select(lt.alias("__t")).dtypes)["__t"]
-    rty = dict(rdf.select(rt.alias("__t")).dtypes)["__t"]
-
-    def _num(t: str) -> bool:
-        return t in _NUMERIC_DTYPES or t.startswith("decimal")
-
-    return "double" if _num(lty) and _num(rty) else "timestamp_ntz"
+    """Unified ordering type for the asof union: numeric event time orders
+    as double; otherwise timestamp_ntz."""
+    numeric = _is_numeric(_time_dtype(ldf, lt)) and _is_numeric(_time_dtype(rdf, rt))
+    return "double" if numeric else "timestamp_ntz"
 
 
 def _compose_instance_on(on, left_instance, right_instance) -> tuple:
@@ -773,11 +680,58 @@ def asof_join(
     how = getattr(how, "value", how)  # accept pw.JoinMode enum
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(direction)
+    if how not in ("left", "inner", "right", "outer", "full"):
+        raise ValueError(f"unknown how={how!r}")
+    if direction == "nearest" and not isinstance(other_time, ColumnRef):
+        raise ValueError("nearest asof needs other_time as a plain column")
     on = _compose_instance_on(on, left_instance, right_instance)
-    if direction == "nearest":
-        return _asof_nearest(
-            left_table, right_table, self_time, other_time, *on, how=how
+    unioned, keys = _asof_union(left_table, right_table, self_time, other_time, on)
+
+    def _last_right(time_order: Column) -> Column:
+        # running frame ordered by (time, side): right rows (side 0) sort
+        # before left rows at equal time, so a match may share the left
+        # row's time.  The forward match runs the same frame over
+        # descending time; a (0, unboundedFollowing) frame would re-scan
+        # current→end per row, O(n²) per key group.
+        w = W.partitionBy(*keys).orderBy(time_order, F.col("__side").asc())
+        return F.last(F.col("__r"), ignorenulls=True).over(
+            w.rowsBetween(W.unboundedPreceding, 0)
         )
+
+    if direction == "nearest":
+        # closer of the backward/forward matches, ties → backward (the
+        # reference's Direction.NEAREST): two frames over the ONE union
+        matched = unioned.withColumns(
+            {"__rb": _last_right(F.col("__t").asc()), "__rf": _last_right(F.col("__t").desc())}
+        )
+        t_sec = _epoch_seconds(F.col("__t"))
+        db = F.abs(t_sec - _epoch_seconds(F.col("__rb")[other_time.name]))
+        df_ = F.abs(_epoch_seconds(F.col("__rf")[other_time.name]) - t_sec)
+        pick = (
+            F.when(F.col("__rb").isNull(), F.col("__rf"))
+            .when(F.col("__rf").isNull(), F.col("__rb"))
+            .when(df_ < db, F.col("__rf"))
+            .otherwise(F.col("__rb"))
+        )
+    else:
+        order = F.col("__t").asc() if direction == "backward" else F.col("__t").desc()
+        matched = unioned.withColumn("__rm", _last_right(order))
+        pick = F.col("__rm")
+    out = matched.filter(F.col("__side") == 1).select(F.col("__l"), pick.alias("__r"))
+    if how in ("inner", "right"):
+        out = out.filter(F.col("__r").isNotNull())
+    if how in ("right", "outer", "full"):
+        # reference JoinMode.RIGHT/OUTER: right rows no left row matched,
+        # padded with a NULL left (the match RULE is unchanged)
+        out = out.unionByName(_asof_unmatched_right(out, right_table._df))
+    return TemporalJoinResult(out, left_table, right_table)
+
+
+def _asof_union(left_table, right_table, self_time, other_time, on):
+    """Both asof sides as one frame of (__k0.., __t, __side, __l, __r):
+    left rows are side 1 with a NULL ``__r``, right rows side 0 with a NULL
+    ``__l``.  Returns the union and its key columns."""
+    from pyspark.sql.types import StructType
 
     pairs = _extract_eq_keys(left_table, right_table, on)
     ldf = left_table._df
@@ -785,53 +739,28 @@ def asof_join(
     lt = left_table._resolve(self_time)
     rt = right_table._resolve(other_time)
 
-    from pyspark.sql.types import StructType
-
     l_struct, r_struct = _pack_sides(ldf, rdf)
     l_type = StructType(ldf.schema.fields)
     r_type = StructType(rdf.schema.fields)
     lkeys = [ldf[lc].alias(f"__k{i}") for i, (lc, _) in enumerate(pairs)]
     rkeys = [rdf[rc].alias(f"__k{i}") for i, (_, rc) in enumerate(pairs)]
 
-    __tt = _asof_time_type(ldf, lt, rdf, rt)
+    tt = _asof_time_type(ldf, lt, rdf, rt)
     lu = ldf.select(
         *lkeys,
-        lt.cast(__tt).alias("__t"),
+        lt.cast(tt).alias("__t"),
         F.lit(1).alias("__side"),
         l_struct.alias("__l"),
         F.lit(None).cast(r_type).alias("__r"),
     )
     ru = rdf.select(
         *rkeys,
-        rt.cast(__tt).alias("__t"),
+        rt.cast(tt).alias("__t"),
         F.lit(0).alias("__side"),
         F.lit(None).cast(l_type).alias("__l"),
         r_struct.alias("__r"),
     )
-    unioned = lu.unionByName(ru)
-
-    keys = [F.col(f"__k{i}") for i in range(len(pairs))]
-    if direction == "backward":
-        w = W.partitionBy(*keys).orderBy(F.col("__t").asc(), F.col("__side").asc())
-    else:  # forward: nearest right row with rt >= lt
-        w = W.partitionBy(*keys).orderBy(F.col("__t").desc(), F.col("__side").asc())
-    w = w.rowsBetween(W.unboundedPreceding, 0)
-    matched = unioned.withColumn("__rm", F.last(F.col("__r"), ignorenulls=True).over(w))
-    out = matched.filter(F.col("__side") == 1).select(
-        F.col("__l"), F.col("__rm").alias("__r")
-    )
-    if how == "inner":
-        out = out.filter(F.col("__r").isNotNull())
-    elif how == "right":
-        # reference JoinMode.RIGHT: matched pairs + right rows no left row
-        # matched, padded with a NULL left (the match RULE is unchanged)
-        out = out.filter(F.col("__r").isNotNull())
-        out = out.unionByName(_asof_unmatched_right(out, rdf))
-    elif how in ("outer", "full"):
-        out = out.unionByName(_asof_unmatched_right(out, rdf))
-    elif how != "left":
-        raise ValueError(f"unknown how={how!r}")
-    return TemporalJoinResult(out, left_table, right_table)
+    return lu.unionByName(ru), [F.col(f"__k{i}") for i in range(len(pairs))]
 
 
 def _asof_unmatched_right(pairs_out, rdf):
@@ -878,91 +807,6 @@ def _asof_unmatched_right(pairs_out, rdf):
     )
 
 
-def _asof_nearest(
-    left_table: Table,
-    right_table: Table,
-    self_time,
-    other_time,
-    *on,
-    how: str = "left",
-) -> TemporalJoinResult:
-    """direction='nearest': pick the closer of the backward/forward matches
-    (ties → backward, matching the reference's Direction.NEAREST).
-
-    Both matches come from two window frames over ONE union+shuffle — no
-    extra pass over the data.
-    """
-    from pyspark.sql.types import StructType
-
-    if not isinstance(other_time, ColumnRef):
-        raise ValueError("nearest asof needs other_time as a plain column")
-    rt_name = other_time.name
-
-    pairs = _extract_eq_keys(left_table, right_table, on)
-    ldf = left_table._df
-    rdf = right_table._df
-    lt = left_table._resolve(self_time)
-    rt = right_table._resolve(other_time)
-
-    l_struct, r_struct = _pack_sides(ldf, rdf)
-    l_type = StructType(ldf.schema.fields)
-    r_type = StructType(rdf.schema.fields)
-    lkeys = [ldf[lc].alias(f"__k{i}") for i, (lc, _) in enumerate(pairs)]
-    rkeys = [rdf[rc].alias(f"__k{i}") for i, (_, rc) in enumerate(pairs)]
-
-    __tt = _asof_time_type(ldf, lt, rdf, rt)
-    lu = ldf.select(
-        *lkeys,
-        lt.cast(__tt).alias("__t"),
-        F.lit(1).alias("__side"),
-        l_struct.alias("__l"),
-        F.lit(None).cast(r_type).alias("__r"),
-    )
-    ru = rdf.select(
-        *rkeys,
-        rt.cast(__tt).alias("__t"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(l_type).alias("__l"),
-        r_struct.alias("__r"),
-    )
-    unioned = lu.unionByName(ru)
-    keys = [F.col(f"__k{i}") for i in range(len(pairs))]
-    w_b = (
-        W.partitionBy(*keys)
-        .orderBy(F.col("__t").asc(), F.col("__side").asc())
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    # forward match via the REVERSE running frame (same formulation the
-    # directional asof uses): a (0, unboundedFollowing) frame re-scans
-    # current→end per row — O(n²) per key group.  Ordering (__t desc,
-    # __side asc) keeps equal-time right rows visible to the left row
-    # (inclusive t' >= t), mirroring w_b's inclusive t' <= t.
-    w_f = (
-        W.partitionBy(*keys)
-        .orderBy(F.col("__t").desc(), F.col("__side").asc())
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    matched = unioned.withColumns(
-        {
-            "__rb": F.last(F.col("__r"), ignorenulls=True).over(w_b),
-            "__rf": F.last(F.col("__r"), ignorenulls=True).over(w_f),
-        }
-    ).filter(F.col("__side") == 1)
-    t_sec = _epoch_seconds(F.col("__t"))
-    db = F.abs(t_sec - _epoch_seconds(F.col("__rb")[rt_name]))
-    df_ = F.abs(_epoch_seconds(F.col("__rf")[rt_name]) - t_sec)
-    pick = (
-        F.when(F.col("__rb").isNull(), F.col("__rf"))
-        .when(F.col("__rf").isNull(), F.col("__rb"))
-        .when(df_ < db, F.col("__rf"))
-        .otherwise(F.col("__rb"))
-    )
-    out = matched.select(F.col("__l"), pick.alias("__r"))
-    if how == "inner":
-        out = out.filter(F.col("__r").isNotNull())
-    return TemporalJoinResult(out, left_table, right_table)
-
-
 def _row_hash(df):
     """8-byte row id for narrow anti-join padding: xxhash64 over every
     column interleaved with its isnull flag (hash fns SKIP nulls, so
@@ -996,8 +840,8 @@ def interval_join(
     hash-partition both sides.
     """
     how = getattr(how, "value", how)  # accept pw.JoinMode enum
-    lb = duration_to_seconds(band.lower_bound) if not isinstance(band.lower_bound, (int, float)) else float(band.lower_bound)
-    ub = duration_to_seconds(band.upper_bound) if not isinstance(band.upper_bound, (int, float)) else float(band.upper_bound)
+    lb = duration_to_seconds(band.lower_bound)
+    ub = duration_to_seconds(band.upper_bound)
     if ub < lb:
         raise ValueError("upper_bound < lower_bound")
     # a degenerate (point) band must NOT shrink the bucket width to ~1e-9:
@@ -1058,33 +902,28 @@ def interval_join(
     )
     out = joined.select("__l", "__r")
     if pad_left:
-        # pad unmatched left rows (reference outer variants :981-1404):
-        # distinct + anti-join over the 8-byte __lid only
-        matched_ids = joined.select("__lid").distinct()
-        all_left = ldf.select(
-            F.struct(*[ldf[c] for c in ldf.columns]).alias("__l"),
-            _row_hash(ldf).alias("__lid"),
-        )
-        unmatched = (
-            all_left.join(matched_ids, on="__lid", how="left_anti")
-            .select("__l")
-            .withColumn("__r", F.lit(None).cast(out.schema["__r"].dataType))
-        )
-        out = out.unionByName(unmatched)
+        # pad unmatched rows (reference outer variants :981-1404): distinct
+        # + anti-join over the 8-byte row id only
+        out = out.unionByName(_interval_unmatched(joined, ldf, "l"))
     if pad_right:
-        matched_rids = joined.select("__rid").distinct()
-        all_right = rdf.select(
-            F.struct(*[rdf[c] for c in rdf.columns]).alias("__r"),
-            _row_hash(rdf).alias("__rid"),
-        )
-        unmatched_r = (
-            all_right.join(matched_rids, on="__rid", how="left_anti")
-            .select("__r")
-            .withColumn("__l", F.lit(None).cast(out.schema["__l"].dataType))
-            .select("__l", "__r")
-        )
-        out = out.unionByName(unmatched_r)
+        out = out.unionByName(_interval_unmatched(joined, rdf, "r"))
     return TemporalJoinResult(out, left_table, right_table)
+
+
+def _interval_unmatched(joined, df, side: str):
+    """Rows of one interval-join side (``side`` "l" or "r", the input
+    ``df``) that no pair in ``joined`` matched, with a NULL other side."""
+    mine, other = ("__l", "__r") if side == "l" else ("__r", "__l")
+    rid = f"__{side}id"
+    all_rows = df.select(
+        F.struct(*[df[c] for c in df.columns]).alias(mine), _row_hash(df).alias(rid)
+    )
+    return (
+        all_rows.join(joined.select(rid).distinct(), on=rid, how="left_anti")
+        .select(mine)
+        .withColumn(other, F.lit(None).cast(joined.schema[other].dataType))
+        .select("__l", "__r")
+    )
 
 
 # -- window join ------------------------------------------------------------

@@ -32,6 +32,22 @@ def test_session_predicate(spark):
     assert got == [("u1", 1, 3.0), ("u1", 2, 3.0), ("u2", 1, 4.0)]
 
 
+def test_session_predicate_all_null_sum_is_null(spark):
+    # the dict API runs windowby's native aggregates: a sum over only NULLs
+    # is NULL, as in every groupby sum (DEVIATIONS.md #15)
+    t = pw.Table.from_rows(
+        spark, [("u1", ts(0), None), ("u1", ts(4), None)], "user string, t timestamp_ntz, v double"
+    )
+    out = stateful.session_windows_by_predicate(
+        t,
+        "t",
+        lambda prev, nxt: (nxt - prev).total_seconds() <= 600,
+        instance="user",
+        aggregations={"n": ("v", "count"), "sv": ("v", "sum")},
+    )
+    assert [(r["n"], r["sv"]) for r in out.df.collect()] == [(2, None)]
+
+
 def test_deduplicate_acceptor(spark):
     # accept a new value only if it is at least 2 bigger than the kept one
     t = pw.Table.from_rows(

@@ -9,6 +9,7 @@ import pytest
 
 import pathwaydataframework_spark as pw
 from pathwaydataframework_spark.internals import reducers as R
+from pathwaydataframework_spark.plans import formatted_plan
 
 
 def ts(minute, second=0):
@@ -180,6 +181,24 @@ def test_intervals_over(spark, events):
     got = {r["_pw_window"].minute: (r["n"], r["sv"]) for r in out.df.collect()}
     # probe 10:10 ← events at 10:00,10:10,10:05 → n=3, sum=7; probe 10:55 ← 10:50
     assert got == {10: (3, 7.0), 55: (1, 3.0)}
+
+    def by(instance):
+        return events.windowby(
+            pw.this.t,
+            window=pw.intervals_over(
+                at=probes.p, lower_bound="-15 minutes", upper_bound="0 minutes", is_outer=False
+            ),
+            instance=instance,
+        ).reduce(n=R.count())
+
+    # an expression instance groups by its value, exposed as _pw_instance
+    got = {(r["_pw_window"].minute, r["_pw_instance"]): r["n"] for r in by(pw.this.eid % 2).df.collect()}
+    assert got == {(10, 1): 1, (10, 0): 2, (55, 1): 1}
+    # a column instance keeps its name and is also exposed as _pw_instance
+    out = by(pw.this.user)
+    assert out.df.columns == ["_pw_window", "user", "_pw_instance", "n"]
+    got = {(r["_pw_window"].minute, r["user"], r["_pw_instance"]): r["n"] for r in out.df.collect()}
+    assert got == {(10, "u1", "u1"): 2, (10, "u2", "u2"): 1, (55, "u1", "u1"): 1}
 
 
 def test_sort_diff_topk(spark, events):
@@ -513,6 +532,8 @@ def test_numeric_time_windows(spark):
     ).reduce(min_t=R.min(pw.this.t), count=R.count())
     got_s = sorted((r["min_t"], r["count"]) for r in so.df.collect())
     assert got_s == [(1.0, 3), (3.0, 1), (3.4, 2)]
+    # the gap is a native comparison, not a Python UDF
+    assert "ArrowEvalPython" not in formatted_plan(so.df)
 
 
 def test_asof_join_numeric_time(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 import pathwaydataframework_spark as pw
 from pathwaydataframework_spark.operators import col_utils
@@ -68,6 +69,40 @@ def test_asof_nearest(spark):
     got = {r["tt"].minute: r["px"] for r in j.df.collect()}
     # 10:05 → nearest is 10:00 (5 vs 15); 10:19 → 10:20 (1 vs 19); 10:30 → 10:20
     assert got == {5: 1.0, 19: 2.0, 30: 2.0}
+
+    # right/outer pad the right rows no nearest match used, as backward
+    # does; an unknown how is rejected
+    quotes_b = pw.Table.from_rows(
+        spark,
+        [("A", ts(0), 1.0), ("A", ts(20), 2.0), ("B", ts(1), 3.0)],
+        "sym string, qt timestamp_ntz, px double",
+    )
+    trades_c = pw.Table.from_rows(
+        spark,
+        [("A", ts(5)), ("A", ts(19)), ("A", ts(30)), ("C", ts(7))],
+        "sym string, tt timestamp_ntz",
+    )
+
+    def nearest(how):
+        return trades_c.asof_join(
+            quotes_b,
+            pw.this.tt,
+            pw.this.qt,
+            pw.left.sym == pw.right.sym,
+            how=how,
+            direction="nearest",
+        ).select(tt=pw.left.tt, px=pw.right.px)
+
+    def pairs(t):
+        return sorted(
+            ((r["tt"].minute if r["tt"] else -1), r["px"] or -1.0) for r in t.df.collect()
+        )
+
+    matched = [(5, 1.0), (19, 2.0), (30, 2.0)]
+    assert pairs(nearest("right")) == sorted(matched + [(-1, 3.0)])
+    assert pairs(nearest("outer")) == sorted(matched + [(-1, 3.0), (7, -1.0)])
+    with pytest.raises(ValueError):
+        nearest("bogus")
 
 
 def test_demo_generators(spark):
