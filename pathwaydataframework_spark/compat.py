@@ -26,9 +26,12 @@ from pathwaydataframework_spark.operators.iterate import iterate
 # -- result-type aliases -----------------------------------------------------
 # The reference's join/window machinery returns one class per join flavor
 # (reference internals/joins.py:46, _asof_join.py, _interval_join.py,
-# _window_join.py); the Spark engine funnels all of them through JoinResult
-# (equi/temporal joins) or Table (already-selected results), so the names
-# alias those two classes — isinstance checks in user code keep working.
+# _window_join.py).  Here join, asof_join, asof_now_join, interval_join and
+# window_join all return a JoinResult, so each flavor's name aliases it and
+# ``isinstance(t.asof_join(...), pw.AsofJoinResult)`` holds as in the
+# reference; the names cannot tell the flavors apart.  A grouped join is a
+# GroupedTable.  Joinable, TableLike and TableSlice alias Table, so a
+# JoinResult is not a ``pw.Joinable`` here.
 
 GroupedJoinResult = GroupedTable
 AsofJoinResult = JoinResult

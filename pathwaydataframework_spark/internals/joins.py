@@ -11,6 +11,8 @@ strategy (dataflow.rs:2341).
 
 from __future__ import annotations
 
+import copy
+import functools
 import itertools
 from typing import Any
 
@@ -40,11 +42,20 @@ _HOW = {
 
 
 class JoinContext(ResolutionContext):
-    def __init__(self, left_table, right_table, lalias: str, ralias: str):
-        self._lt, self._rt = left_table, right_table
-        self._la, self._ra = lalias, ralias
+    """Resolves pw.left / pw.right / pw.this, and refs owned by the joined
+    tables, in every two-sided result.  A side's column ``c`` is
+    ``<alias>.c``: a table alias in an equi-join, a struct column (``__l`` /
+    ``__r``) in a temporal join's frame.  The probe frame has both aliases
+    visible, so operators that dispatch on type (``+`` on strings, ``&`` on
+    ints) pick the same form after every join."""
 
-    def resolve_ref(self, ref: ColumnRef) -> Column:
+    def __init__(self, result: "JoinResult"):
+        self._result = result
+        self._lt, self._rt = result._lt, result._rt
+        self._la, self._ra = result._la, result._ra
+
+    def side(self, ref: ColumnRef) -> str:
+        """The alias of the side that owns ``ref``."""
         owner = ref.owner
         # chained joins (reference Joinable: JoinResult.join): a side built
         # by _flat_table carries its source tables, so refs owned by the
@@ -52,9 +63,9 @@ class JoinContext(ResolutionContext):
         lsrc = getattr(self._lt, "_join_sources", ())
         rsrc = getattr(self._rt, "_join_sources", ())
         if owner is LEFT or owner is self._lt or owner in lsrc:
-            return F.col(f"{self._la}.{ref.name}")
+            return self._la
         if owner is RIGHT or owner is self._rt or owner in rsrc:
-            return F.col(f"{self._ra}.{ref.name}")
+            return self._ra
         if owner is THIS:
             # unqualified: prefer unambiguous side
             in_l = ref.name in self._lt._df.columns
@@ -62,22 +73,32 @@ class JoinContext(ResolutionContext):
             if in_l and in_r:
                 raise ValueError(f"ambiguous column {ref.name!r}; use pw.left/pw.right")
             if in_l:
-                return F.col(f"{self._la}.{ref.name}")
+                return self._la
             if in_r:
-                return F.col(f"{self._ra}.{ref.name}")
+                return self._ra
         raise ValueError(f"cannot resolve {ref.name!r} in join")
+
+    def resolve_ref(self, ref: ColumnRef) -> Column:
+        return F.col(f"{self.side(ref)}.{ref.name}")
 
     def id_column(self, owner: Any = THIS) -> Column:
         raise NotImplementedError("argmin/argmax over a join: select first, then group")
 
     def probe_df(self):
-        # analysis-only frame with both aliases visible; never executed
-        return self._lt._df.alias(self._la).crossJoin(self._rt._df.alias(self._ra))
+        # analysis-only frame; never executed
+        frame = self._result._frame
+        if frame is None:
+            frame = self._lt._df.alias(self._la).crossJoin(self._rt._df.alias(self._ra))
+        return frame
 
 
 class JoinResult:
-    """Lazy join: materialized on .select()/.reduce() so late projection can
-    prune columns before the shuffle (Catalyst does the pruning)."""
+    """A two-sided result: what ``join`` and every temporal join return.
+
+    An equi-join is lazy: it is materialized on .select()/.reduce() so late
+    projection can prune columns before the shuffle (Catalyst does the
+    pruning).  A temporal join hands over the frame it built, which holds
+    each side's row as a struct column, ``__l`` and ``__r``."""
 
     def __init__(self, left_table, right_table, on: tuple, how: str, id=None):
         self._lt = left_table
@@ -87,8 +108,20 @@ class JoinResult:
         self._id = id
         n = next(_alias_counter)
         self._la, self._ra = f"__pwl{n}", f"__pwr{n}"
-        self._ctx = JoinContext(left_table, right_table, self._la, self._ra)
+        self._frame: DataFrame | None = None
         self._filters: list[Expr] = []
+
+    @classmethod
+    def _over_frame(cls, frame: DataFrame, left_table, right_table, on: tuple) -> "JoinResult":
+        """The result of a temporal join whose ``frame`` packs the left and
+        right rows into struct columns ``__l`` and ``__r``."""
+        out = cls(left_table, right_table, on, "inner")
+        out._la, out._ra, out._frame = "__l", "__r", frame
+        return out
+
+    @functools.cached_property
+    def _ctx(self) -> JoinContext:
+        return JoinContext(self)
 
     def _cond(self) -> Column | None:
         cond = None
@@ -98,21 +131,19 @@ class JoinResult:
         return cond
 
     def _joined(self) -> DataFrame:
-        ldf = self._lt._df.alias(self._la)
-        rdf = self._rt._df.alias(self._ra)
-        cond = self._cond()
-        if cond is None:
-            out = ldf.crossJoin(rdf)
-        else:
-            out = ldf.join(rdf, cond, self._how)
+        out = self._frame
+        if out is None:
+            ldf = self._lt._df.alias(self._la)
+            rdf = self._rt._df.alias(self._ra)
+            cond = self._cond()
+            out = ldf.crossJoin(rdf) if cond is None else ldf.join(rdf, cond, self._how)
         for f in self._filters:
             out = out.filter(lift(f)._resolve(self._ctx))
         return out
 
     def filter(self, expr) -> "JoinResult":
-        """Theta predicates post equi-join — reference joins.py:693."""
-        out = JoinResult(self._lt, self._rt, self._on, "inner", id=self._id)
-        out._la, out._ra, out._ctx, out._how = self._la, self._ra, self._ctx, self._how
+        """Theta predicates post join — reference joins.py:693."""
+        out = copy.copy(self)
         out._filters = self._filters + [expr]
         return out
 
@@ -267,9 +298,7 @@ def join(
     left_instance=None,
     right_instance=None,
 ) -> JoinResult:
-    how = getattr(how, "value", how)  # accept pw.JoinMode enum anywhere
-    if how not in _HOW:
-        raise ValueError(f"how must be one of {sorted(_HOW)}")
+    how = join_mode(how)
     # either side may itself be a JoinResult (reference Joinable.join):
     # flatten it, keeping source-table refs resolvable through the chain
     if isinstance(left_table, JoinResult):
@@ -284,6 +313,26 @@ def join(
             "Cannot join table with itself. Use <table>.copy() as one of "
             "the arguments of the join."
         )
+    on = with_instance(on, left_instance, right_instance)
+    return JoinResult(left_table, right_table, on, how, id=id)
+
+
+def join_mode(how) -> str:
+    """``how`` checked against the join modes; every join accepts a
+    ``pw.JoinMode`` member for it too."""
+    how = getattr(how, "value", how)
+    if how not in _HOW:
+        raise ValueError(f"unknown how={how!r}; use one of {sorted(_HOW)}")
+    return how
+
+
+def with_instance(on: tuple, left_instance, right_instance) -> tuple:
+    """``on`` with the ``left_instance``/``right_instance`` pair folded in —
+    reference joins.py:965-967.  The pair is one more equi-condition, which
+    Catalyst folds into the same hash key, so the shuffle co-partitions by
+    (on-keys, instance) exactly as the reference's per-instance shards do.
+    ``join`` and every temporal join take the pair this way
+    (_asof_join.py:479 / _interval_join.py:577)."""
     if (left_instance is None) != (right_instance is None):
         # reference arg_handlers.py:160-164: both or neither
         raise ValueError(
@@ -291,9 +340,5 @@ def join(
             "should always be provided simultaneously"
         )
     if left_instance is not None:
-        # reference joins.py:965-967: the instance pair is just one more
-        # equi-condition — Catalyst folds it into the same hash key, so the
-        # shuffle co-partitions by (on-keys, instance) exactly as the
-        # reference's per-instance shards do.
         on = (*on, lift(left_instance) == lift(right_instance))
-    return JoinResult(left_table, right_table, on, how, id=id)
+    return on

@@ -535,8 +535,6 @@ class Table:
         joins.py:965-967)."""
         from pathwaydataframework_spark.internals.joins import join as _join
 
-        # accept pw.JoinMode members anywhere a how= string is expected
-        how = getattr(how, "value", how)
         return _join(
             self,
             other,
@@ -571,7 +569,8 @@ class Table:
             left_instance=left_instance, right_instance=right_instance,
         )
 
-    # -- ordered / temporal operators (operators/) --------------------------
+    # -- ordered operators (operators/); windowby and the temporal joins are
+    # bound from operators.temporal by _bind_temporal_methods ---------------
 
     def sort(self, key, instance=None) -> "Table":
         from pathwaydataframework_spark.operators.ordered import sort as _sort
@@ -592,26 +591,6 @@ class Table:
         from pathwaydataframework_spark.operators.ordered import topk as _topk
 
         return _topk(self, k, order_by, instance=instance, descending=descending)
-
-    def windowby(self, time_expr, *, window, instance=None, behavior=None):
-        from pathwaydataframework_spark.operators.temporal import windowby as _windowby
-
-        return _windowby(self, time_expr, window=window, instance=instance, behavior=behavior)
-
-    def asof_join(self, other, self_time, other_time, *on, how="left", direction="backward", defaults=None, left_instance=None, right_instance=None):
-        from pathwaydataframework_spark.operators.temporal import asof_join as _asof
-
-        return _asof(self, other, self_time, other_time, *on, how=how, direction=direction, defaults=defaults, left_instance=left_instance, right_instance=right_instance)
-
-    def interval_join(self, other, self_time, other_time, interval, *on, how="inner", left_instance=None, right_instance=None):
-        from pathwaydataframework_spark.operators.temporal import interval_join as _ij
-
-        return _ij(self, other, self_time, other_time, interval, *on, how=how, left_instance=left_instance, right_instance=right_instance)
-
-    def window_join(self, other, self_time, other_time, window, *on, how="inner", left_instance=None, right_instance=None):
-        from pathwaydataframework_spark.operators.temporal import window_join as _wj
-
-        return _wj(self, other, self_time, other_time, window, *on, how=how, left_instance=left_instance, right_instance=right_instance)
 
     def deduplicate(self, *, value=None, instance=None, acceptor=None) -> "Table":
         from pathwaydataframework_spark.operators.dedup import deduplicate as _dd
@@ -653,10 +632,11 @@ class Table:
 
 
 # -- reference Table-method parity -------------------------------------------
-# The reference attaches the temporal directional variants as Table methods
-# (reference __init__.py:252-265) and has a handful of introspection
-# helpers; bind them here so `t.interval_join_left(...)`-style user code
-# ports unchanged.  Late imports avoid a circular module load.
+# The reference attaches windowby, the temporal joins and their directional
+# variants as Table methods (reference __init__.py:252-265) and has a
+# handful of introspection helpers; bind them here so
+# `t.interval_join_left(...)`-style user code ports unchanged.  Late imports
+# avoid a circular module load.
 
 
 def _bind_temporal_methods() -> None:
@@ -670,8 +650,7 @@ def _bind_temporal_methods() -> None:
         "window_join", "window_join_inner", "window_join_left",
         "window_join_right", "window_join_outer", "windowby",
     ):
-        if not hasattr(Table, name):
-            setattr(Table, name, getattr(_t, name))
+        setattr(Table, name, getattr(_t, name))
 
 
 def _table_schema(self) -> dict:

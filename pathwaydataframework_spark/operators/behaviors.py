@@ -62,9 +62,10 @@ def inactivity_detection(
     """Detect inactivity periods — reference time_utils.py:52.
 
     Batch semantics: emit one row per gap larger than ``max_gap`` with the
-    instance, the last active time and the time activity resumed.  (The
-    streaming variant — alert *while* inactive — needs timers and lands
-    with applyInPandasWithState in the streaming round.)
+    instance, the last active time and the time activity resumed.  The
+    reference's streaming variant, which alerts *while* an instance is
+    still inactive, is not implemented: a gap is reported only once
+    activity resumes.
     """
     from pathwaydataframework_spark.operators.temporal import duration_to_seconds
 

@@ -46,12 +46,12 @@ from pathwaydataframework_spark.internals.expression import (
     LEFT,
     RIGHT,
     THIS,
+    BinOp,
     ColumnRef,
-    Expr,
-    ResolutionContext,
     lift,
 )
 from pathwaydataframework_spark.internals.groupbys import GroupedContext
+from pathwaydataframework_spark.internals.joins import _HOW, JoinResult, join, join_mode, with_instance
 from pathwaydataframework_spark.internals.table import Table
 
 
@@ -542,57 +542,7 @@ def windowby(table: Table, time_expr, *, window, instance=None, behavior=None) -
     return WindowedTable(table, time_expr, window, instance, behavior)
 
 
-# -- two-sided results (shared by temporal joins) ---------------------------
-
-
-class _SideContext(ResolutionContext):
-    """Resolves pw.left/pw.right (or the source tables) against the packed
-    ``__l`` / ``__r`` structs of a temporal-join result."""
-
-    def __init__(self, left_table, right_table):
-        self._lt, self._rt = left_table, right_table
-
-    def resolve_ref(self, ref: ColumnRef) -> Column:
-        owner = ref.owner
-        if owner is LEFT or owner is self._lt:
-            return F.col(f"__l.{ref.name}")
-        if owner is RIGHT or owner is self._rt:
-            return F.col(f"__r.{ref.name}")
-        if owner is THIS:
-            in_l = ref.name in self._lt._df.columns
-            in_r = ref.name in self._rt._df.columns
-            if in_l and in_r:
-                raise ValueError(f"ambiguous column {ref.name!r}; use pw.left/pw.right")
-            if in_l:
-                return F.col(f"__l.{ref.name}")
-            if in_r:
-                return F.col(f"__r.{ref.name}")
-        raise ValueError(f"cannot resolve {ref.name!r}")
-
-
-class TemporalJoinResult:
-    """Result of asof/interval/window joins: a DataFrame with ``__l``/``__r``
-    structs; ``.select`` projects through pw.left / pw.right."""
-
-    def __init__(self, df, left_table, right_table):
-        self._df = df
-        self._ctx = _SideContext(left_table, right_table)
-
-    def select(self, *args, **kwargs) -> Table:
-        cols = []
-        for a in args:
-            if not isinstance(a, ColumnRef):
-                raise TypeError("positional args must be column refs")
-            cols.append(lift(a)._resolve(self._ctx).alias(a.name))
-        for name, e in kwargs.items():
-            cols.append(lift(e)._resolve(self._ctx).alias(name))
-        return Table(self._df.select(*cols))
-
-    def filter(self, expr) -> "TemporalJoinResult":
-        out = TemporalJoinResult.__new__(TemporalJoinResult)
-        out._df = self._df.filter(lift(expr)._resolve(self._ctx))
-        out._ctx = self._ctx
-        return out
+# -- helpers shared by the temporal joins ----------------------------------
 
 
 def _pack_sides(ldf, rdf):
@@ -608,29 +558,12 @@ def _asof_time_type(ldf, lt: Column, rdf, rt: Column) -> str:
     return "double" if numeric else "timestamp_ntz"
 
 
-def _compose_instance_on(on, left_instance, right_instance) -> tuple:
-    """Fold ``left_instance``/``right_instance`` into the equi-key set —
-    reference joins.py:965-967 (the instance pair is one more equi-
-    condition; temporal joins thread the kwargs the same way,
-    _asof_join.py:479 / _interval_join.py:577)."""
-    if (left_instance is None) != (right_instance is None):
-        raise ValueError(
-            "`left_instance` and `right_instance` arguments to join "
-            "should always be provided simultaneously"
-        )
-    if left_instance is not None:
-        on = (*on, left_instance == right_instance)
-    return on
-
-
 def _extract_eq_keys(left_table, right_table, on) -> list[tuple[str, str]]:
     """on conditions must be equality of left/right column refs (the
     reference enforces the same — joins.py:1071)."""
     pairs = []
     for e in on:
         lcol = rcol = None
-        from pathwaydataframework_spark.internals.expression import BinOp
-
         if not isinstance(e, BinOp):
             raise ValueError("join conditions must be left_col == right_col")
         a, b = e._l, e._r
@@ -666,7 +599,7 @@ def asof_join(
     defaults: dict | None = None,
     left_instance=None,
     right_instance=None,
-) -> TemporalJoinResult:
+) -> JoinResult:
     """Match each left row with the nearest earlier/later right row per key.
 
     Reference: stdlib/temporal/_asof_join.py:479 (Direction enum :34).
@@ -675,16 +608,17 @@ def asof_join(
     ``last(right_struct, ignorenulls)`` ordered by (time, side) partitioned
     by key — a single shuffle+sort, no row multiplication.  DuckDB's ASOF
     JOIN is the oracle.
+
+    ``defaults`` maps column refs of either side to values: in a result row
+    where that side had no match, the value replaces the column's NULL.
     """
     direction = getattr(direction, "value", direction)  # accept Direction
-    how = getattr(how, "value", how)  # accept pw.JoinMode enum
+    how = join_mode(how)
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(direction)
-    if how not in ("left", "inner", "right", "outer", "full"):
-        raise ValueError(f"unknown how={how!r}")
     if direction == "nearest" and not isinstance(other_time, ColumnRef):
         raise ValueError("nearest asof needs other_time as a plain column")
-    on = _compose_instance_on(on, left_instance, right_instance)
+    on = with_instance(on, left_instance, right_instance)
     unioned, keys = _asof_union(left_table, right_table, self_time, other_time, on)
 
     def _last_right(time_order: Column) -> Column:
@@ -724,7 +658,28 @@ def asof_join(
         # reference JoinMode.RIGHT/OUTER: right rows no left row matched,
         # padded with a NULL left (the match RULE is unchanged)
         out = out.unionByName(_asof_unmatched_right(out, right_table._df))
-    return TemporalJoinResult(out, left_table, right_table)
+    result = JoinResult._over_frame(out, left_table, right_table, on)
+    return _with_defaults(result, defaults) if defaults else result
+
+
+def _with_defaults(result: JoinResult, defaults: dict) -> JoinResult:
+    """``result`` with each side that had no match (a NULL ``__l`` or
+    ``__r`` struct) replaced by a struct of NULLs carrying the ``defaults``
+    of that side's columns."""
+    if not all(isinstance(ref, ColumnRef) for ref in defaults):
+        raise TypeError("asof_join defaults keys must be column refs")
+    frame = result._frame
+    for side in ("__l", "__r"):
+        values = {r.name: v for r, v in defaults.items() if result._ctx.side(r) == side}
+        if values:
+            pad = F.struct(
+                *[
+                    F.lit(values.get(f.name)).cast(f.dataType).alias(f.name)
+                    for f in frame.schema[side].dataType.fields
+                ]
+            )
+            frame = frame.withColumn(side, F.coalesce(F.col(side), pad))
+    return JoinResult._over_frame(frame, result._lt, result._rt, result._on)
 
 
 def _asof_union(left_table, right_table, self_time, other_time, on):
@@ -830,7 +785,7 @@ def interval_join(
     how: str = "inner",
     left_instance=None,
     right_instance=None,
-) -> TemporalJoinResult:
+) -> JoinResult:
     """Time-band join: pairs where other_time − self_time ∈ [lb, ub].
 
     Reference: _interval_join.py:577; we reproduce its double-bucketing
@@ -839,7 +794,7 @@ def interval_join(
     is the plan that scales — Catalyst sees a plain equi-join and can
     hash-partition both sides.
     """
-    how = getattr(how, "value", how)  # accept pw.JoinMode enum
+    how = join_mode(how)
     lb = duration_to_seconds(band.lower_bound)
     ub = duration_to_seconds(band.upper_bound)
     if ub < lb:
@@ -851,7 +806,7 @@ def interval_join(
     # floor at 1 second.
     width = max(ub - lb, 1.0)
 
-    on = _compose_instance_on(on, left_instance, right_instance)
+    on = with_instance(on, left_instance, right_instance)
     pairs = _extract_eq_keys(left_table, right_table, on)
     ldf = left_table._df
     rdf = right_table._df
@@ -869,8 +824,6 @@ def interval_join(
     # so they skip the id column entirely.
     pad_left = how in ("left", "outer", "full")
     pad_right = how in ("right", "outer", "full")
-    if how not in ("inner", "left", "right", "outer", "full"):
-        raise ValueError(f"unknown how={how!r}")
 
     lid_cols = [_row_hash(ldf).alias("__lid")] if pad_left else []
     lprep = ldf.select(
@@ -907,7 +860,7 @@ def interval_join(
         out = out.unionByName(_interval_unmatched(joined, ldf, "l"))
     if pad_right:
         out = out.unionByName(_interval_unmatched(joined, rdf, "r"))
-    return TemporalJoinResult(out, left_table, right_table)
+    return JoinResult._over_frame(out, left_table, right_table, on)
 
 
 def _interval_unmatched(joined, df, side: str):
@@ -939,13 +892,13 @@ def window_join(
     how: str = "inner",
     left_instance=None,
     right_instance=None,
-) -> TemporalJoinResult:
+) -> JoinResult:
     """Rows join iff they fall in the same window — reference
     _window_join.py:156.  Lowered to an equi-join on the window start (plus
     any key columns); sliding windows explode each row into its
     duration/hop windows first (JVM-side, no UDF)."""
-    how = getattr(how, "value", how)  # accept pw.JoinMode enum
-    on = _compose_instance_on(on, left_instance, right_instance)
+    how = join_mode(how)
+    on = with_instance(on, left_instance, right_instance)
     pairs = _extract_eq_keys(left_table, right_table, on)
 
     def _starts(tcol: Column) -> Column:
@@ -981,19 +934,13 @@ def window_join(
         *[rdf[rc].alias(f"__k{i}") for i, (_, rc) in enumerate(pairs)],
     )
     join_keys = ["__w"] + [f"__k{i}" for i in range(len(pairs))]
-    spark_how = {
-        "inner": "inner", "left": "left", "right": "right",
-        "outer": "full", "full": "full",
-    }.get(how)
-    if spark_how is None:
-        raise ValueError(f"unknown how={how!r}")
     # the window start + keys are USING columns, so the equi-join mode IS
     # the window-join mode: unmatched sides come back with a NULL struct
-    joined = lprep.join(rprep, on=join_keys, how=spark_how)
+    joined = lprep.join(rprep, on=join_keys, how=_HOW[how])
     out = joined.select(
         "__l", "__r", F.col("__w").alias("_pw_window_start")
     )
-    return TemporalJoinResult(out, left_table, right_table)
+    return JoinResult._over_frame(out, left_table, right_table, on)
 
 
 # -- asof-now join (stream-static analogue, batch = plain asof) -------------
@@ -1005,12 +952,13 @@ def asof_now_join(
 ):
     """Reference _asof_now_join.py:176: left rows join the *current* right
     state.  In batch the current state is the whole table → plain equi-join.
-    The streaming variant (stream-static join) lands with the streaming
-    round."""
-    from pathwaydataframework_spark.internals.joins import join as _join
-
-    on = _compose_instance_on(on, left_instance, right_instance)
-    return _join(left_table, right_table, *on, how=how)
+    With a streaming left table the same plan is Spark's stream-static join:
+    each micro-batch joins the right table as it is then
+    (``test_stream_static_join_asof_now`` runs that join)."""
+    return join(
+        left_table, right_table, *on, how=how,
+        left_instance=left_instance, right_instance=right_instance,
+    )
 
 
 # -- reference-namespace parity ---------------------------------------------
@@ -1019,7 +967,7 @@ def asof_now_join(
 # _interval_join.py:700+, _window_join.py:360+) plus the behavior/time
 # utilities and per-flavor result classes.  The Spark engine keeps ONE
 # parameterized implementation per join; the variants below are thin
-# partial applications, and the result classes all alias TemporalJoinResult.
+# partial applications, and the result classes all alias JoinResult.
 
 import enum as _enum
 
@@ -1033,10 +981,10 @@ class Direction(_enum.Enum):
 
 
 Interval = interval  # reference _interval_join.py:35 class name
-AsofJoinResult = TemporalJoinResult
-AsofNowJoinResult = TemporalJoinResult
-IntervalJoinResult = TemporalJoinResult
-WindowJoinResult = TemporalJoinResult
+AsofJoinResult = JoinResult
+AsofNowJoinResult = JoinResult
+IntervalJoinResult = JoinResult
+WindowJoinResult = JoinResult
 
 
 def asof_join_left(left_table, right_table, self_time, other_time, *on, **kw):

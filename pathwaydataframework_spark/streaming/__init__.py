@@ -1,9 +1,12 @@
 """Structured-Streaming surface (reference SURVEY.md §2.9).
 
-Round-1 scope: batch parity first.  This module holds the streaming
-entry points that are already semantically settled; the stateful operators
-(deduplicate-with-acceptor, predicate sessions, _forget/_buffer behaviors)
-land in the next round on applyInPandasWithState.
+This module holds the stateless streaming entry points, the keyed sinks
+(``write_upsert_parquet``, ``write_changelog_parquet``), the stream-stream
+interval and window joins and the per-operator ``_buffer``/``_forget``
+stage (``buffered_stage``).  ``streaming/stateful.py`` holds the stateful
+operators on ``applyInPandasWithState``: deduplicate with an acceptor
+(``deduplicate_stream_acceptor``) and predicate sessions
+(``session_windows_stream_by_predicate``).
 
 Mapping (SURVEY.md §2.9):
 - common_behavior(cutoff)  → ``withWatermark``
@@ -62,6 +65,25 @@ def _read_parquet_if_exists(spark, path):
         raise
 
 
+def _replace_snapshot(df: DataFrame, path: str) -> None:
+    """Overwrite the parquet snapshot at ``path`` with ``df``, which may
+    read ``path`` itself: ``df`` is written to ``<path>__tmp`` first and
+    that copy overwrites ``path`` (overwriting in place would delete the
+    files ``df`` still reads)."""
+    df.write.mode("overwrite").parquet(path + "__tmp")
+    copy = df.sparkSession.read.schema(df.schema).parquet(path + "__tmp")
+    copy.write.mode("overwrite").parquet(path)
+
+
+def _upsert(current: DataFrame | None, batch: DataFrame, key_cols: list[str]) -> DataFrame:
+    """``current`` with each key of ``batch`` (one row per key) replaced by
+    the batch's row."""
+    if current is None:
+        return batch
+    keep = current.join(batch.select(*key_cols), on=key_cols, how="left_anti")
+    return keep.unionByName(batch)
+
+
 def write_foreach_batch(table: Table, batch_fn, *, checkpoint: str | None = None,
                         output_mode: str = "update", trigger_available_now: bool = True):
     """Changelog-style output — the reference's update-stream sinks map to
@@ -81,20 +103,10 @@ def write_upsert_parquet(table: Table, path: str, key_cols: list[str], *,
     target by key (read-modify-write; production deployments use Delta MERGE
     — same call shape, transactional).  Reproduces the reference's
     ``update_rows``-style output table semantics on a stream."""
-    import pyspark.sql.functions as F
 
     def merge(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        dedup_batch = batch_df.dropDuplicates(key_cols)
-        current = _read_parquet_if_exists(spark, path)
-        if current is not None:
-            keep = current.join(dedup_batch.select(*key_cols), on=key_cols, how="left_anti")
-            merged = keep.unionByName(dedup_batch)
-        else:
-            merged = dedup_batch
-        merged.write.mode("overwrite").parquet(path + "__tmp")
-        out = spark.read.parquet(path + "__tmp")
-        out.write.mode("overwrite").parquet(path)
+        current = _read_parquet_if_exists(batch_df.sparkSession, path)
+        _replace_snapshot(_upsert(current, batch_df.dropDuplicates(key_cols), key_cols), path)
 
     return write_foreach_batch(table, merge, checkpoint=checkpoint)
 
@@ -225,16 +237,10 @@ def write_changelog_parquet(
                 .withColumns({**stamp, "__diff__": F.lit(1)})
             )
             log_delta = retractions.unionByName(additions)
-            merged = current.join(
-                batch.select(*key_cols), on=key_cols, how="left_anti"
-            ).unionByName(batch)
         else:
             log_delta = batch.withColumns({**stamp, "__diff__": F.lit(1)})
-            merged = batch
         log_delta.write.mode("append").parquet(path + "__log")
-        merged.write.mode("overwrite").parquet(path + "__tmp")
-        out = spark.read.parquet(path + "__tmp")
-        out.write.mode("overwrite").parquet(path)
+        _replace_snapshot(_upsert(current, batch, key_cols), path)
 
     return write_foreach_batch(table, merge, checkpoint=checkpoint)
 
@@ -327,11 +333,7 @@ def buffered_stage(
         released = rows.filter(F.col("__t_us") + F.lit(delay_us) <= F.lit(mx))
         held = rows.filter(F.col("__t_us") + F.lit(delay_us) > F.lit(mx))
         released.drop("__t_us").write.mode("append").parquet(out_dir)
-        # buffer rewrite via tmp (overwrite-in-place would corrupt the read)
-        held.drop("__t_us").write.mode("overwrite").parquet(buf_dir + "__tmp")
-        spark.read.schema(schema).parquet(buf_dir + "__tmp").write.mode(
-            "overwrite"
-        ).parquet(buf_dir)
+        _replace_snapshot(held.drop("__t_us"), buf_dir)
 
     q = write_foreach_batch(
         table, _step, checkpoint=checkpoint, output_mode="append"

@@ -40,6 +40,22 @@ def test_result_type_aliases_are_real_classes(spark):
     assert isinstance(j, pw.JoinResult)
     assert isinstance(a, pw.TableLike) and isinstance(a, pw.Joinable)
     assert pw.AsofJoinResult is pw.JoinResult
+    assert pw.temporal.AsofJoinResult is pw.AsofJoinResult
+    # every temporal join returns the one two-sided result class
+    import datetime as dt
+
+    t = pw.Table.from_rows(spark, [(1, dt.datetime(2024, 1, 1))], "k long, t timestamp_ntz")
+    u = t.copy()
+    on = pw.left.k == pw.right.k
+    asof = t.asof_join(u, pw.this.t, pw.this.t, on)
+    interval = t.interval_join(u, pw.this.t, pw.this.t, pw.interval(0, 60), on)
+    window = t.window_join(u, pw.this.t, pw.this.t, pw.tumbling("1 hour"), on)
+    asof_now = t.asof_now_join(u, on)
+    assert isinstance(asof, pw.AsofJoinResult)
+    assert isinstance(interval, pw.IntervalJoinResult)
+    assert isinstance(window, pw.WindowJoinResult)
+    for result in (asof, interval, window, asof_now):
+        assert isinstance(result, pw.JoinResult)
     assert pw.iterate_universe is pw.iterate
 
 

@@ -111,6 +111,61 @@ def test_asof_backward_and_forward(spark):
     assert got == {("A", 10): 110.0, ("B", 0): 50.0}
 
 
+def test_asof_join_defaults_fill_unmatched_sides(spark):
+    """Reference asof_join(defaults=...): a ``{column ref: value}`` map whose
+    value replaces that column in result rows where its side had no match."""
+    left = pw.Table.from_rows(
+        spark, [(1, ts(10), 1.0), (2, ts(10), 2.0)], "k long, t timestamp_ntz, v double"
+    )
+    right = pw.Table.from_rows(
+        spark, [(1, ts(0), 10.0), (3, ts(0), 30.0)], "k long, rt timestamp_ntz, w double"
+    )
+    on = pw.left.k == pw.right.k
+
+    def rows(result):
+        out = result.select(lk=pw.left.k, v=pw.left.v, rk=pw.right.k, w=pw.right.w)
+        return sorted((tuple(r) for r in out.df.collect()), key=str)
+
+    # left k=2 has no match: w takes its default, rk stays NULL
+    got = rows(left.asof_join(right, pw.this.t, pw.this.rt, on, defaults={right.w: -1.0}))
+    assert got == [(1, 1.0, 1, 10.0), (2, 2.0, None, -1.0)]
+    # the padded right row k=3 has no left side: v takes its default
+    got = rows(
+        left.asof_join(
+            right, pw.this.t, pw.this.rt, on, how="outer",
+            defaults={pw.right.w: -1.0, pw.left.v: 0.0},
+        )
+    )
+    assert got == [(1, 1.0, 1, 10.0), (2, 2.0, None, -1.0), (None, 0.0, 3, 30.0)]
+
+
+def test_temporal_join_select_dispatches_on_type_like_join(spark):
+    """A select over an asof or interval result resolves through the same
+    context as one over a join: string ``+`` concatenates, int ``&`` is
+    bitwise, and an int64 ``-`` overflow is NULL."""
+    left = pw.Table.from_rows(
+        spark, [(1, ts(0), "a", 6, -(2**63))],
+        "k long, t timestamp_ntz, s string, m long, x long",
+    )
+    right = pw.Table.from_rows(
+        spark, [(1, ts(0), "b", 3, 1)], "k long, rt timestamp_ntz, u string, n long, y long"
+    )
+    on = pw.left.k == pw.right.k
+
+    def rows(result):
+        out = result.select(
+            c=pw.left.s + pw.right.u, b=pw.left.m & pw.right.n, d=pw.left.x - pw.right.y
+        )
+        return [tuple(r) for r in out.df.collect()]
+
+    expected = rows(left.join(right, on))
+    assert expected == [("ab", 2, None)]
+    assert rows(left.asof_join(right, pw.this.t, pw.this.rt, on)) == expected
+    assert rows(
+        left.interval_join(right, pw.this.t, pw.this.rt, pw.interval(0, 60), on)
+    ) == expected
+
+
 def test_interval_join_matches_naive(spark, events):
     right = pw.Table.from_rows(
         spark,
